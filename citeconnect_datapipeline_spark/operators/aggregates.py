@@ -455,21 +455,20 @@ def approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Expand that doubles the input stream (every row evaluated once
     # per distinct group) before the dedup exchange. Split the exact
     # sides into one agg per distinct column — each is a plain
-    # partial-dedup two-phase agg over one narrow column — and fold
-    # the 1-row results with a broadcast; the rel_err arithmetic
-    # moves onto the folded columns (same values, same 4-dp round).
+    # partial-dedup two-phase agg over one narrow column. The 1-row
+    # order count folds in as a scalar subquery, evaluated once and
+    # read as a value (no join, so no nested loop); the rel_err
+    # arithmetic stays on the folded columns (same 4-dp round).
     parts = li.agg(
         F.countDistinct("l_partkey").alias("exact_parts"),
         F.approx_count_distinct("l_partkey").alias("approx_parts"),
         F.approx_count_distinct("l_orderkey").alias("approx_orders"),
     )
-    orders_cnt = li.agg(
-        F.countDistinct("l_orderkey").alias("exact_orders")
-    )
-    return parts.join(F.broadcast(orders_cnt)).select(
+    orders_cnt = li.agg(F.countDistinct("l_orderkey"))
+    return parts.select(
         "exact_parts",
         "approx_parts",
-        "exact_orders",
+        orders_cnt.scalar().alias("exact_orders"),
         "approx_orders",
         F.round(
             F.abs(F.col("approx_parts") - F.col("exact_parts"))

@@ -162,23 +162,24 @@ def array_semi_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side-deduped exchange) and prune every other order BEFORE
     # the distinct + array-building group — the previous form built
     # ref/kept arrays for every order in the lake and TakeOrdered'd
-    # 99.99% of them away. The 1-row cutoff rides a broadcast; with
-    # fewer than 100 orders the coalesce keeps everything.
+    # 99.99% of them away. The 1-row cutoff is a scalar subquery,
+    # evaluated once and read by the filter as a value (no join, so
+    # no nested loop). With fewer than 100 orders the cutoff is the
+    # largest key and every order is kept; on an empty table it is
+    # NULL and the null-safe coalesce still keeps every row.
     cutoff = (
         li.select("l_orderkey")
         .distinct()
         .orderBy("l_orderkey")
         .limit(100)
-        .agg(F.max("l_orderkey").alias("k100"))
+        .agg(F.max("l_orderkey"))
     )
     refs = (
         li.select("l_orderkey", "l_partkey")
-        .join(F.broadcast(cutoff))
         .filter(
             F.col("l_orderkey")
-            <= F.coalesce(F.col("k100"), F.col("l_orderkey"))
+            <= F.coalesce(cutoff.scalar(), F.col("l_orderkey"))
         )
-        .drop("k100")
         .distinct()
     )
     flagged = refs.join(
