@@ -111,7 +111,10 @@ _DRIVER_VERIFIED = frozenset(
         "token_budget_allocation", "token_entropy",
         "tumbling_window_agg", "variant_json_stats",
         "vocab_coverage", "zipf_alpha_fit",
-        "classifier_eval", "kmeans_clusters", "quality_classifier",
+        "classifier_eval", "quality_classifier",
+        # (kmeans_clusters' r4 row was rows-only; it has had an oracle
+        # since the k-means fits were unified, so its first hash row
+        # is still to come)
         # r5 rows (CORRECTNESS_r05.json: 35 hash-MATCH + 13
         # contractual rows-only, all with sane row counts; the two
         # r5 err rows — embed_documents, embedding_pca_whiten — are
@@ -258,6 +261,19 @@ _REVERIFY_AGED: tuple[str, ...] = (
 )
 
 _REVERIFY_FIRST = (
+    # The r13 rewrites with no driver row since (ROADMAP carry-over),
+    # then the clustering family moved onto the one k-means fit,
+    # assignment pass and Gram pass (each re-audited at
+    # sf0.001/0.01/0.1 with tools/oracle_audit.py):
+    "assoc_rules_topk", "copurchase_pmi_topk",
+    "part_copurchase_pagerank", "lpa_communities_topk",
+    "community_modularity", "quality_classifier", "classifier_eval",
+    "kmeans_clusters",          # new oracle: unrolled 6-round Lloyd
+    "kmeans_portable",          # the shared fit + assignment pass
+    "silhouette_portable",      # b = the assignment's runner-up d2
+    "semantic_dedup",           # blocks on the shared assignment
+    "embedding_pca_whiten",     # the shared Gram pass
+    "pca_power_portable",       # the shared Gram pass
     # r13 wave 2 — the freshest rewrites go FIRST (r12 verdict item
     # 2: materially-rewritten queries head the window; all re-audited
     # at sf0.001/0.01/0.1 this round via tools/oracle_audit.py):
@@ -281,8 +297,6 @@ _REVERIFY_FIRST = (
     # r13 wave 1 (each re-audited locally at sf0.001, sf0.01 AND
     # sf0.1 this round — tools/oracle_audit.py MATCH; the driver row
     # makes the rewrite externally visible):
-    "pca_power_portable",       # r13: one Gram sufficient-statistics
-    # pass + driver-side power iteration (56 jobs -> 5)
     "logreg_adagrad_portable",  # r13: kernel-built feature table +
     # one mapInArrow partial pass per AdaGrad round
     "ab_lift_bootstrap",        # r13: replicate weights/partials in
@@ -295,19 +309,6 @@ _REVERIFY_FIRST = (
     "heaps_law_fit",            # r13: nested-prefix min(doc_id)
     # rewrite removes the countDistinct Expand
     "min_cost_supplier_per_part",  # r13: window argmin
-    "lpa_communities_topk",     # r13: one pinned exchange per round
-    "community_modularity",     # r13: shares the LPA label memo
-    "copurchase_pmi_topk",      # r13: marginals/total off the shared
-    # basket aggregate (3 lineitem scans -> 1), then wave 2's
-    # set-multiplicity pair stage
-    "assoc_rules_topk",         # r13: in-basket pair expansion
-    # replaces the o-keyed self-join; wave 2 adds set multiplicity
-    "part_copurchase_pagerank",  # r13: edge build dedups above its
-    # pinned repartition (one exchange); wave 2 dedups duplicate
-    # part-sets before the pair explode
-    "quality_classifier",       # r13: kernel feature build + kernel
-    # gradient rounds (rows-only)
-    "classifier_eval",          # r13: consumes the same fit
 )
 
 
@@ -340,7 +341,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     Freshness cadence (r10 verdict #4 — current numbers): the driver
     window is ~50 slots/round. As of r12 the registry is FROZEN at
-    330 queries (308 oracled + 22 contractual rows-only), all 330
+    330 queries (309 oracled + 21 contractual rows-only), all 330
     driver-verified at least once (r1-r11 union). r13 spends the
     window on closing the rewrite-verification gap (r12 verdict
     item 2): 31 r12-family entries whose green rows predate their

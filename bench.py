@@ -4,16 +4,17 @@ factor and emit one JSON line with per-query and total wall-clock.
 
 Env:
   SPARK_GRAFT_SF_DIR    data dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS      local[] parallelism (default 32)
+  SPARK_GRAFT_CPUS      local[] parallelism (default: the host's cores)
   BENCH_QUERIES         comma-separated subset (default: all registered)
-  BENCH_CONCURRENCY     concurrent query submissions (default 16; 1 =
-                        sequential). The suite is ~70 short analytic
-                        queries; one at a time, scheduling gaps and
-                        single-threaded plan phases leave most of the
-                        32 cores idle. A real multi-tenant engine
-                        overlaps queries, so suite THROUGHPUT (wall-
-                        clock, the headline ``value``) is measured
-                        with concurrent submission -- Spark's
+  BENCH_CONCURRENCY     concurrent query submissions (default half the
+                        cores, 16 at 32; 1 = sequential). The suite is
+                        ~70 short analytic queries; one at a time,
+                        scheduling gaps and single-threaded plan
+                        phases leave most of the cores idle. A real
+                        multi-tenant engine overlaps queries, so
+                        suite THROUGHPUT (wall-clock, the headline
+                        ``value``) is measured with concurrent
+                        submission -- Spark's
                         scheduler interleaves jobs from multiple
                         driver threads natively. ``per_query_sum``
                         (the sum of individual latencies, inflated by
@@ -114,11 +115,14 @@ def main() -> None:
                 except Exception:
                     pass
 
-    # 16 measured best on local[32] for the ~100-query suite (31.6 s
-    # vs 35.8 s at 8 and 32.6 s at 24): enough in-flight queries to
-    # fill scheduling gaps, not so many that every serial phase
-    # queues behind a full run queue.
-    concurrency = max(int(os.environ.get("BENCH_CONCURRENCY", "16")), 1)
+    # Half the cores: 16 measured best on local[32] for the
+    # ~100-query suite (31.6 s vs 35.8 s at 8 and 32.6 s at 24):
+    # enough in-flight queries to fill scheduling gaps, not so many
+    # that every serial phase queues behind a full run queue.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    concurrency = max(
+        int(os.environ.get("BENCH_CONCURRENCY") or cpus // 2), 1
+    )
     # Suite wall-clock on a shared box is noisy (observed 46 s vs
     # 75 s for identical code under background load); run the suite
     # BENCH_REPEATS times and report the best pass — the second pass
@@ -229,7 +233,7 @@ def main() -> None:
     # scheduling floor (~0.3 s/query, amortized away on a cluster).
     # Only meaningful from ISOLATED latencies: under concurrent
     # submission every per-query time is inflated by deliberate
-    # contention (16 queries share 32 cores). So the over-2x list is
+    # contention (one query per two cores). So the over-2x list is
     # always computed from isolated runs: at BENCH_CONCURRENCY=1 the
     # suite pass IS isolated; otherwise re-measure, sequentially, the
     # CANDIDATE set — queries whose CONTENDED time already fails the

@@ -1,4 +1,4 @@
-"""Embedding-space clustering and semantic deduplication.
+"""Embedding-space clustering, whitening and semantic deduplication.
 
 The reference's near-dup surface is lexical (MinHash / SimHash /
 n-gram Jaccard, databias has no embedding clustering at all); a
@@ -7,33 +7,48 @@ embedding space, then drop vectors that sit within a cosine threshold
 of an earlier-kept vector in the same cluster (the SemDeDup recipe:
 clustering bounds the quadratic pair search to within-cluster blocks).
 
-Spark-first shapes, all bounded on the driver:
+One Lloyd's loop, one assignment kernel, one Gram pass, all bounded
+on the driver:
 
-- Lloyd's k-means keeps the k x d centroid matrix (a few KB) on the
-  driver and runs one job per iteration: assignment is an Arrow-
-  batched pandas_udf doing a single numpy GEMM per batch (vectors x
-  centroids), the update is ``posexplode`` + groupBy(cluster, dim)
-  partial-aggregated means -- k*d rows collected per iteration, never
-  the vectors. Init is the k vectors with smallest md5(vec_id):
-  deterministic AND unbiased by ingest order (the round-3 verdict
-  flagged lowest-id sampling as data-dependent; hash order is not).
-- At 100 TB: the scan-per-iteration is the cost, k*d stays tiny, and
-  the same loop runs with k in the thousands before the collect
+- ``_kmeans_fit`` is the only k-means fit. Init is the k vectors with
+  smallest md5(vec_id): deterministic AND unbiased by ingest order
+  (the round-3 verdict flagged lowest-id sampling as data-dependent;
+  hash order is not). Each round is ONE mapInArrow pass whose tasks
+  emit a k x d partial-sum row and k counts -- a few KB per task
+  collected, never the vectors -- and the driver sets each centroid
+  to the 6-dp rounded mean. Distances are |v|^2 - 2 v.c + |c|^2,
+  rounded at 6 dp (F.round semantics) before the argmin, ties go to
+  the lowest cluster number, and a cluster that receives no vectors
+  is dropped while the rest keep their seed numbers. These are the
+  rules of the unrolled DuckDB oracle (``_kmp_head`` /
+  ``_kmp_round_ctes``), so kmeans_clusters (k=8, 5 updates),
+  kmeans_portable (k=4, 1 update) and silhouette_portable are all
+  hash-checked against it.
+- ``_assign`` is the only place vectors meet fitted centroids: one
+  Arrow pass giving each vector its cluster, own d2 and runner-up
+  d2. The k-means profiles aggregate it, silhouette_portable reads
+  the runner-up as b, and semantic_dedup blocks on the cluster.
+- ``_gram`` is the only Gram pass: per-task (n, column sums, X'X)
+  partials from one native GEMM per Arrow batch, shared by
+  embedding_pca_whiten and pca_power_portable.
+- At 100 TB: the scan per Lloyd round is the cost, k*d stays tiny,
+  and the same loop runs with k in the thousands before the collect
   matters. Skewed cluster sizes only affect the dedup stage, where
-  the per-cluster GEMM is quadratic -- production bounds it by raising
-  k (smaller clusters) exactly as SemDeDup does (its paper uses
-  k=50000 on LAION); the applyInPandas block shape is identical to
-  embedding_neardup_pairs, which documents the same watch item.
+  the per-cluster GEMM is quadratic -- production bounds it by
+  raising k (smaller clusters) exactly as SemDeDup does (its paper
+  uses k=50000 on LAION); the applyInPandas block shape is identical
+  to embedding_neardup_pairs, which documents the same watch item.
 
-Both queries are iterative / loop-carried, hence non-SQL-expressible:
-rows-only driver check + property tests (determinism, inertia
-monotonicity, drop-evidence parity against a brute-force numpy rerun)
-in tests/test_clustering.py.
+semantic_dedup (a loop-carried greedy keep-set) and
+embedding_pca_whiten (an eigendecomposition) stay rows-only; their
+numpy parity and property tests are in tests/test_clustering.py.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -51,6 +66,8 @@ from ..sources.tables import literal_frame, load_table
 
 K_CLUSTERS = 8
 N_ITERS = 5
+KMP_K = 4  # kmeans_portable / silhouette_portable cluster count
+KMP_ITERS = 2  # their assignment rounds (KMP_ITERS - 1 updates)
 # Synthetic embeddings are near-orthogonal (max pairwise cosine ~0.51
 # at sf0.01), so the usual ~0.9 production threshold would make the
 # dedup vacuously empty; 0.35 sits just under the observed tail so the
@@ -59,12 +76,50 @@ N_ITERS = 5
 SEMDEDUP_TAU = 0.35
 
 
+def _round6(x: np.ndarray) -> np.ndarray:
+    """``spark_round(x, 6)`` elementwise. For an integral q, q / 1e6
+    is the double nearest q x 10^-6, as the decimal path gives; only
+    the choice of q can differ, and only where x * 1e6 sits within
+    float noise of a .5 boundary -- those few go through spark_round."""
+    t = np.abs(x) * 1e6
+    out = np.copysign(np.floor(t + 0.5) / 1e6, x)
+    near = np.abs(t - np.floor(t) - 0.5) <= np.maximum(t, 1.0) * 2.0**-40
+    near |= t >= 2.0**52
+    for i in np.flatnonzero(near):
+        out.flat[i] = spark_round(x.flat[i])
+    return out
+
+
+def _matrix(col) -> np.ndarray:
+    """A non-empty Arrow list<float|double> column as an [n, d]
+    float64 matrix."""
+    flat = np.asarray(col.flatten(), dtype=np.float64)
+    return flat.reshape(len(col), len(flat) // len(col))
+
+
+def _nearest(M: np.ndarray, C: np.ndarray):
+    """Per row of M: (nearest cluster, its d2, the runner-up d2, inf
+    when no other cluster is live). A NaN row of C is a dropped
+    cluster and never wins."""
+    live = ~np.isnan(C[:, 0])
+    Cl = np.where(live[:, None], C, 0.0)
+    d2 = _round6(
+        (M * M).sum(axis=1)[:, None]
+        - 2.0 * (M @ Cl.T)
+        + (Cl * Cl).sum(axis=1)[None, :]
+    )
+    d2[:, ~live] = np.inf
+    a = d2.argmin(axis=1)  # first minimum: ties to the lowest cluster
+    rows = np.arange(len(M))
+    own = d2[rows, a]
+    d2[rows, a] = np.inf
+    return a, own, d2.min(axis=1)
+
+
 def _centroid_init(emb: DataFrame, k: int):
     """k seed vectors in md5(vec_id) order -- deterministic, stable
     under re-runs and resharding, and not correlated with ingest
     order the way lowest-k-ids would be. Collect is k rows."""
-    import numpy as np
-
     rows = (
         emb.select("vec_id", "embedding")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
@@ -74,32 +129,17 @@ def _centroid_init(emb: DataFrame, k: int):
     return np.stack([np.asarray(r["embedding"], dtype="float64") for r in rows])
 
 
-def _assign_udf(centroids):
-    """pandas_udf: embedding -> nearest-centroid index. One GEMM per
-    Arrow batch; ties break to the lowest index (np.argmin)."""
-    import numpy as np
-
-    C = centroids
-    c2 = (C * C).sum(axis=1)
-
-    @F.pandas_udf("int")
-    def assign(col: pd.Series) -> pd.Series:
-        M = np.stack(col.to_numpy()).astype("float64")
-        d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
-        return pd.Series(d2.argmin(axis=1).astype("int32"))
-
-    return assign
-
-
 def _kmeans_fit(
     spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS, iters: int = N_ITERS
 ):
-    """Lloyd's loop; returns (embeddings DF, final centroid matrix).
-    One assignment scan + one k*d-row update collect per iteration.
+    """Lloyd's loop; returns (embeddings DF, k x d centroid matrix)
+    after ``iters`` centroid updates. Row j is seed cluster j; a
+    dropped cluster's row is NaN.
 
     The fitted centroids are a materialized intermediate, cached per
     (context, lake dir, k, iters): kmeans_clusters and semantic_dedup
-    consume the SAME model, and a production pipeline fits it once at
+    consume the SAME model, as do kmeans_portable and
+    silhouette_portable, and a production pipeline fits it once at
     ingest (as build_ivf_index materializes its index). The lake is
     immutable per TESTDATA.md, and the fit is deterministic
     (hash-ordered init), so entries cannot go stale or drift."""
@@ -114,137 +154,239 @@ def _kmeans_fit(
 
 
 def _kmeans_fit_impl(spark: SparkSession, sf_dir: str, k: int, iters: int):
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = _centroid_init(emb, k)
-    d = centroids.shape[1]
-    partial_schema = StructType(
-        [
-            StructField("cluster", IntegerType()),
-            StructField("pos", IntegerType()),
-            StructField("s", DoubleType()),
-            StructField("c", LongType()),
-        ]
-    )
+    shape = centroids.shape
     for _ in range(iters):
         C = centroids
-        c2 = (C * C).sum(axis=1)
 
         def partial_sums(batches):
             # assignment AND the k x d running sums in one Python
-            # stage: each task emits k*d partial rows, so the update
-            # shuffle moves O(k*d*tasks) rows -- never the vectors
-            # (the posexplode formulation shuffles n*d rows).
-            S = np.zeros((k, d))
-            cnt = np.zeros(k, dtype="int64")
-            for pdf in batches:
-                M = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-                d2 = (
-                    (M * M).sum(axis=1)[:, None]
-                    - 2.0 * (M @ C.T)
-                    + c2[None, :]
-                )
-                a = d2.argmin(axis=1)
+            # stage: each task emits ONE row of k*d sums and k
+            # counts, so the collect moves O(k*d*tasks) doubles --
+            # never the vectors, and no shuffle.
+            S = np.zeros(shape)
+            cnt = np.zeros(shape[0], dtype=np.int64)
+            for b in batches:
+                if b.num_rows == 0:
+                    continue
+                M = _matrix(b.column(0))
+                a = _nearest(M, C)[0]
                 np.add.at(S, a, M)
-                cnt += np.bincount(a, minlength=k)
-            ci, pi = np.nonzero(np.ones((k, d)))
-            yield pd.DataFrame(
-                {
-                    "cluster": ci.astype("int32"),
-                    "pos": pi.astype("int32"),
-                    "s": S[ci, pi],
-                    "c": cnt[ci],
-                }
+                cnt += np.bincount(a, minlength=shape[0])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([S.ravel().tolist()], pa.list_(pa.float64())),
+                    pa.array([cnt.tolist()], pa.list_(pa.int64())),
+                ],
+                names=["s", "c"],
             )
 
-        sums = (
+        parts = (
             emb.select("embedding")
-            .mapInPandas(partial_sums, schema=partial_schema)
-            .groupBy("cluster", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
+            .mapInArrow(partial_sums, "s array<double>, c array<long>")
             .collect()
-        )  # k*d rows (512 here) -- bounded by design, never the vectors
-        nxt = centroids.copy()  # empty cluster keeps its old centroid
-        for r in sums:
-            if r["c"] > 0:
-                nxt[r["cluster"], r["pos"]] = r["s"] / r["c"]
-        centroids = nxt
+        )
+        S = sum(np.asarray(r["s"], dtype=np.float64) for r in parts)
+        cnt = sum(np.asarray(r["c"], dtype=np.int64) for r in parts)
+        centroids = np.where(
+            (cnt > 0)[:, None],
+            _round6(S.reshape(shape) / np.maximum(cnt, 1)[:, None]),
+            np.nan,
+        )
     return emb, centroids
 
 
-@query("kmeans_clusters")
+def _assign(df: DataFrame, centroids) -> DataFrame:
+    """The one assignment pass: ``df``'s columns (an ``embedding``
+    among them) pass through, plus ``cluster`` (0-based seed number),
+    ``d2`` (6-dp distance to it) and ``d2b`` (the runner-up, NULL
+    when no other cluster is live). One GEMM per Arrow batch."""
+    schema = StructType(
+        df.schema.fields
+        + [
+            StructField("cluster", IntegerType()),
+            StructField("d2", DoubleType()),
+            StructField("d2b", DoubleType()),
+        ]
+    )
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            a, own, second = _nearest(
+                _matrix(b.column("embedding")), centroids
+            )
+            yield pa.RecordBatch.from_arrays(
+                b.columns
+                + [
+                    pa.array(a.astype(np.int32)),
+                    pa.array(own),
+                    pa.array(second, mask=np.isinf(second)),
+                ],
+                names=b.schema.names + ["cluster", "d2", "d2b"],
+            )
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _cluster_profile(assigned: DataFrame) -> DataFrame:
+    """Per cluster of an ``_assign`` output carrying ``label``: size
+    ``n_vecs``, summed own distance ``d2_sum``, and the majority
+    ``top_label`` (ties to the lower label) with its count ``top_n``.
+    One scan of the assignment, one (cluster, label) aggregate."""
+    per = assigned.groupBy("cluster", "label").agg(
+        F.count("*").alias("n"), F.sum("d2").alias("s")
+    )
+    w = Window.partitionBy("cluster")
+    return (
+        per.select(
+            "cluster",
+            F.sum("n").over(w).alias("n_vecs"),
+            F.sum("s").over(w).alias("d2_sum"),
+            F.col("label").alias("top_label"),
+            F.col("n").alias("top_n"),
+            F.row_number()
+            .over(w.orderBy(F.desc("n"), "label"))
+            .alias("rn"),
+        )
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _kmp_round_ctes(rounds: int) -> str:
+    """``rounds`` unrolled Lloyd rounds as DuckDB CTEs: each round
+    emits the FULL (vec, cluster) rounded distance table d{t}, the
+    argmin assignment a{t} derived from it, and the 6-dp centroid
+    update c{t}. Keeping d{t} explicit is what lets the silhouette
+    tail read second-best distances. a{t} and c{t} are MATERIALIZED:
+    inlined, every round re-derived all earlier ones."""
+    steps = []
+    prev = "c0"
+    for t in range(1, rounds + 1):
+        steps.append(f""",
+    n{t} AS (
+        SELECT cluster, SUM(cval * cval) AS c2 FROM {prev} GROUP BY 1
+    ),
+    s{t} AS (
+        SELECT v.vec_id, c.cluster, SUM(v.val * c.cval) AS dot
+        FROM vdim v JOIN {prev} c USING (dim)
+        GROUP BY 1, 2
+    ),
+    d{t} AS (
+        SELECT s.vec_id, s.cluster,
+               ROUND(v2.v2 - 2 * s.dot + n{t}.c2, 6) AS d2
+        FROM s{t} s
+        JOIN v2 USING (vec_id)
+        JOIN n{t} USING (cluster)
+    ),
+    a{t} AS MATERIALIZED (
+        SELECT vec_id, cluster, d2
+        FROM d{t}
+        QUALIFY ROW_NUMBER() OVER (
+            PARTITION BY vec_id ORDER BY d2, cluster
+        ) = 1
+    ),
+    c{t} AS MATERIALIZED (
+        SELECT a.cluster, v.dim, ROUND(AVG(v.val), 6) AS cval
+        FROM a{t} a JOIN vdim v USING (vec_id)
+        GROUP BY 1, 2
+    )""")
+        prev = f"c{t}"
+    return "".join(steps)
+
+
+def _kmp_head(k: int) -> str:
+    return f"""
+    WITH seeds AS (
+        SELECT vec_id, embedding,
+               ROW_NUMBER() OVER (
+                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+               ) AS cluster
+        FROM embeddings
+        QUALIFY cluster <= {k}
+    ),
+    vdim AS (
+        SELECT vec_id,
+               generate_subscripts(embedding, 1) AS dim,
+               CAST(unnest(embedding) AS DOUBLE) AS val
+        FROM embeddings
+    ),
+    v2 AS (SELECT vec_id, SUM(val * val) AS v2 FROM vdim GROUP BY 1),
+    c0 AS (
+        SELECT cluster,
+               generate_subscripts(embedding, 1) AS dim,
+               CAST(unnest(embedding) AS DOUBLE) AS cval
+        FROM seeds
+    )"""
+
+
+def _profile_oracle(k: int, rounds: int, select: str) -> str:
+    """Unrolled-CTE oracle for a k-means profile: ``rounds`` Lloyd
+    rounds (the last one's assignment is the answer), then the
+    ``_cluster_profile`` columns per 1-based cluster, projected by
+    ``select``. Every centroid component and every distance is
+    rounded at 6 dp before any comparison (the registry float
+    contract), so argmin assignment cannot diverge between engines."""
+    last = f"a{rounds}"
+    return _kmp_head(k) + _kmp_round_ctes(rounds) + f""",
+    lab AS (
+        SELECT a.cluster, e.label, COUNT(*) AS n
+        FROM {last} a JOIN embeddings e USING (vec_id)
+        GROUP BY 1, 2
+    ),
+    mode AS (
+        SELECT cluster, label AS top_label, n AS top_n
+        FROM lab
+        QUALIFY ROW_NUMBER() OVER (
+            PARTITION BY cluster ORDER BY n DESC, label
+        ) = 1
+    ),
+    prof AS (
+        SELECT a.cluster, CAST(COUNT(*) AS BIGINT) AS n_vecs,
+               SUM(a.d2) AS d2_sum, m.top_label, m.top_n
+        FROM {last} a JOIN mode m USING (cluster)
+        GROUP BY a.cluster, m.top_label, m.top_n
+    )
+    SELECT {select}
+    FROM prof
+    ORDER BY 1
+    """
+
+
+@query(
+    "kmeans_clusters",
+    oracle=_profile_oracle(
+        K_CLUSTERS,
+        N_ITERS + 1,
+        "cluster - 1 AS cluster_id, n_vecs,"
+        " ROUND(d2_sum, 3) AS inertia, top_label,"
+        " ROUND(top_n * 1.0 / n_vecs, 4) AS top_label_share",
+    ),
+)
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means cluster profile: per-cluster size, inertia (sum of
     squared distance to the centroid), and the dominant ``label`` with
     its share (how well unsupervised structure recovers the labels).
-    Iterative -> rows-only driver check; invariants are pytest-held
-    (sizes sum to the table count, total inertia non-increasing in
-    the iteration count, byte-identical across reruns)."""
-    import numpy as np
-
+    k=8 after 5 centroid updates, so the oracle unrolls 6 assignment
+    rounds; pytest also holds sizes summing to the table count,
+    inertia non-increasing in the update count, and byte-identical
+    reruns."""
     emb, centroids = _kmeans_fit(spark, sf_dir)
-    C = centroids
-    c2 = (C * C).sum(axis=1)
-
-    full_schema = StructType(
-        [
-            StructField("cluster_id", IntegerType()),
-            StructField("d2", DoubleType()),
-            StructField("label", IntegerType()),
-        ]
+    prof = _cluster_profile(
+        _assign(emb.select("embedding", "label"), centroids)
     )
-
-    def assign_with_label(batches):
-        for pdf in batches:
-            M = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            d2 = (M * M).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
-            a = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "cluster_id": a.astype("int32"),
-                    # clamp the -2ab+b^2 cancellation noise at 0
-                    "d2": np.maximum(d2[np.arange(len(a)), a], 0.0),
-                    "label": pdf["label"].astype("int32"),
-                }
-            )
-
-    assigned = emb.select("embedding", "label").mapInPandas(
-        assign_with_label, schema=full_schema
-    )
-    per_label = (
-        assigned.groupBy("cluster_id", "label")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("n"), "label"
-    )
-    top_label = (
-        per_label.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster_id",
-            F.col("label").alias("top_label"),
-            F.col("n").alias("top_label_n"),
-        )
-    )
-    stats = assigned.groupBy("cluster_id").agg(
-        F.count("*").alias("n_vecs"),
-        F.round(F.sum("d2"), 3).alias("inertia"),
-    )
-    return (
-        stats.join(top_label, "cluster_id")
-        .select(
-            "cluster_id",
-            "n_vecs",
-            "inertia",
-            "top_label",
-            F.round(F.col("top_label_n") / F.col("n_vecs"), 4).alias(
-                "top_label_share"
-            ),
-        )
-        .orderBy("cluster_id")
-    )
+    return prof.select(
+        F.col("cluster").alias("cluster_id"),
+        "n_vecs",
+        F.round("d2_sum", 3).alias("inertia"),
+        "top_label",
+        F.round(F.col("top_n") / F.col("n_vecs"), 4).alias(
+            "top_label_share"
+        ),
+    ).orderBy("cluster_id")
 
 
 @query("semantic_dedup")
@@ -257,14 +399,11 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster numpy loop inside ONE applyInPandas, so only cluster
     summaries cross back. Reports kept/dropped per cluster.
 
-    Iterative (k-means) + loop-carried greedy -> rows-only driver
-    check; pytest re-derives the kept set brute-force on the
-    collected block and asserts exact parity, plus every dropped
-    vector has a kept lower-id witness at >= tau."""
-    import numpy as np
-
+    Loop-carried greedy -> rows-only driver check; pytest re-derives
+    the kept set brute-force on the collected block and asserts exact
+    parity, plus every dropped vector has a kept lower-id witness at
+    >= tau."""
     emb, centroids = _kmeans_fit(spark, sf_dir)
-    assign = _assign_udf(centroids)
     tau = SEMDEDUP_TAU
 
     out_schema = StructType(
@@ -304,11 +443,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        emb.select(
-            "vec_id",
-            "embedding",
-            assign(F.col("embedding")).alias("cluster_id"),
-        )
+        _assign(emb.select("vec_id", "embedding"), centroids)
+        .select("vec_id", "embedding", F.col("cluster").alias("cluster_id"))
         .groupBy("cluster_id")
         .applyInPandas(dedup_block, out_schema)
         .orderBy("cluster_id")
@@ -320,65 +456,55 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_EPS = 1e-6  # eigenvalue floor: keeps near-null directions finite
 
 
-def _mean_and_gram(emb: DataFrame):
-    """(mu, G, n): embedding mean, Gram matrix X'X and row count via
-    ONE Arrow-batched scan emitting d + d*d partial sums — the same
-    driver contract as the k-means update (collect moves O(d^2)
-    floats, never vectors). d=64 -> 4160 rows collected at ANY
-    corpus size."""
-    import numpy as np
-
-    d = len(emb.select("embedding").first()[0])
-    schema = StructType(
+def _gram_partials(batches):
+    """mapInArrow kernel: one (n, column sums, X'X) row per task,
+    from one native GEMM per Arrow batch."""
+    n = 0
+    s = None
+    g = None
+    for b in batches:
+        col = b.column(0)
+        if len(col) == 0:
+            continue
+        x = _matrix(col)
+        n += x.shape[0]
+        cs = x.sum(axis=0)
+        gg = x.T @ x
+        s = cs if s is None else s + cs
+        g = gg if g is None else g + gg
+    if s is None:
+        return
+    yield pa.RecordBatch.from_arrays(
         [
-            StructField("i", IntegerType()),
-            StructField("j", IntegerType()),
-            StructField("s", DoubleType()),
-            StructField("c", LongType()),
-        ]
+            pa.array([n], type=pa.int64()),
+            pa.array([s.tolist()], type=pa.list_(pa.float64())),
+            pa.array([g.reshape(-1).tolist()], type=pa.list_(pa.float64())),
+        ],
+        names=["n", "s", "g"],
     )
 
-    def partials(batches):
-        for pdf in batches:
-            M = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-            G = M.T @ M
-            mu = M.sum(axis=0)
-            ii, jj = np.meshgrid(range(d), range(d), indexing="ij")
-            out = pd.DataFrame(
-                {
-                    "i": ii.ravel().astype("int32"),
-                    "j": jj.ravel().astype("int32"),
-                    "s": G.ravel(),
-                    "c": 0,
-                }
-            )
-            mean_rows = pd.DataFrame(
-                {
-                    "i": np.arange(d, dtype="int32"),
-                    "j": np.full(d, -1, dtype="int32"),
-                    "s": mu,
-                    "c": len(M),
-                }
-            )
-            yield pd.concat([out, mean_rows], ignore_index=True)
 
-    rows = (
-        emb.select("embedding")
-        .mapInPandas(partials, schema)
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
+def _gram(emb: DataFrame):
+    """(n, s, G): row count, column sums and Gram matrix X'X of the
+    embeddings in ONE corpus pass. The collect is O(d^2) per task --
+    the model, never the corpus -- and the driver adds the partials.
+    This is how spark.ml computes a small-d PCA
+    (computeGramianMatrix + local eigensolve)."""
+    parts = (
+        emb.select(F.col("embedding").cast("array<double>").alias("x"))
+        .mapInArrow(
+            _gram_partials, "n long, s array<double>, g array<double>"
+        )
         .collect()
     )
-    G = np.zeros((d, d))
-    mu_sum = np.zeros(d)
-    n = 0
-    for r in rows:
-        if r["j"] == -1:
-            mu_sum[r["i"]] = r["s"]
-            n += int(r["c"]) if r["i"] == 0 else 0
-        else:
-            G[r["i"], r["j"]] = r["s"]
-    return mu_sum / n, G, n
+    n = float(sum(r["n"] for r in parts))
+    d = len(parts[0]["s"])
+    s = np.zeros(d)
+    g = np.zeros((d, d))
+    for r in parts:
+        s += np.asarray(r["s"], dtype=np.float64)
+        g += np.asarray(r["g"], dtype=np.float64).reshape(d, d)
+    return n, s, g
 
 
 def embedding_pca_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,28 +518,26 @@ def embedding_pca_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant to eigenvector SIGN flips, so the output is
     deterministic end-to-end: no sign convention needed.
 
-    Spark shape: ONE Arrow scan collects d + d² Gram/mean partials
-    (k-means update contract — O(d²) floats on the driver at any
-    corpus size), eigh of the 64x64 covariance runs on the driver,
-    and the projection streams back as a single pandas_udf GEMM per
-    batch. Components rounded to 6 dp for a stable row contract.
+    Spark shape: the shared ``_gram`` pass (O(d²) floats on the
+    driver at any corpus size), eigh of the 64x64 covariance on the
+    driver, and the projection streams back as a single pandas_udf
+    GEMM per batch. Components rounded to 6 dp for a stable row
+    contract.
 
     Non-SQL-expressible (matrix eigendecomposition) -> rows-only
     driver check; numpy parity + whitened-covariance-is-identity
     pinned in tests/test_clustering.py."""
-    import numpy as np
-
     emb = load_table(spark, sf_dir, "embeddings")
-    mu, G, n = _mean_and_gram(emb)
+    n, s, G = _gram(emb)
+    mu = s / n
     cov = G / n - np.outer(mu, mu)
     lam, U = np.linalg.eigh(cov)
     W = (U * (1.0 / np.sqrt(np.maximum(lam, 0.0) + PCA_EPS))) @ U.T
-    mu_c = mu.copy()
 
     @F.pandas_udf("array<double>")
     def project(col: pd.Series) -> pd.Series:
         M = np.stack(col.to_numpy()).astype("float64")
-        Y = (M - mu_c) @ W
+        Y = (M - mu) @ W
         return pd.Series([np.round(y, 6).tolist() for y in Y])
 
     return (
@@ -448,284 +572,31 @@ def embedding_pca_whiten_query(
     ).orderBy("vec_id")
 
 
-KMP_K = 4  # portable-twin cluster count
-KMP_ITERS = 2  # unrolled Lloyd rounds
-
-
-def _kmp_round_ctes() -> str:
-    """The KMP_ITERS unrolled Lloyd rounds as DuckDB CTEs, shared by
-    `kmeans_portable` and `silhouette_portable`: each round emits the
-    FULL (vec, cluster) rounded distance table d{t}, the argmin
-    assignment a{t} derived from it, and the 6-dp centroid update
-    c{t}. Keeping d{t} explicit is what lets the silhouette tail read
-    second-best distances without re-deriving the chain."""
-    steps = []
-    prev = "c0"
-    for t in range(1, KMP_ITERS + 1):
-        steps.append(f""",
-    n{t} AS (
-        SELECT cluster, SUM(cval * cval) AS c2 FROM {prev} GROUP BY 1
+@query(
+    "kmeans_portable",
+    oracle=_profile_oracle(
+        KMP_K,
+        KMP_ITERS,
+        "cluster, n_vecs, ROUND(d2_sum, 6) AS inertia, top_label,"
+        " ROUND(top_n * 1.0 / n_vecs, 6) AS purity",
     ),
-    s{t} AS (
-        SELECT v.vec_id, c.cluster, SUM(v.val * c.cval) AS dot
-        FROM vdim v JOIN {prev} c USING (dim)
-        GROUP BY 1, 2
-    ),
-    d{t} AS (
-        SELECT s.vec_id, s.cluster,
-               ROUND(v2.v2 - 2 * s.dot + n{t}.c2, 6) AS d2
-        FROM s{t} s
-        JOIN v2 USING (vec_id)
-        JOIN n{t} USING (cluster)
-    ),
-    a{t} AS (
-        SELECT vec_id, cluster, d2
-        FROM d{t}
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY vec_id ORDER BY d2, cluster
-        ) = 1
-    ),
-    c{t} AS (
-        SELECT a.cluster, v.dim, ROUND(AVG(v.val), 6) AS cval
-        FROM a{t} a JOIN vdim v USING (vec_id)
-        GROUP BY 1, 2
-    )""")
-        prev = f"c{t}"
-    return "".join(steps)
-
-
-def _kmp_head() -> str:
-    return f"""
-    WITH seeds AS (
-        SELECT vec_id, embedding,
-               ROW_NUMBER() OVER (
-                   ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-               ) AS cluster
-        FROM embeddings
-        QUALIFY cluster <= {KMP_K}
-    ),
-    vdim AS (
-        SELECT vec_id,
-               generate_subscripts(embedding, 1) AS dim,
-               CAST(unnest(embedding) AS DOUBLE) AS val
-        FROM embeddings
-    ),
-    v2 AS (SELECT vec_id, SUM(val * val) AS v2 FROM vdim GROUP BY 1),
-    c0 AS (
-        SELECT cluster,
-               generate_subscripts(embedding, 1) AS dim,
-               CAST(unnest(embedding) AS DOUBLE) AS cval
-        FROM seeds
-    )"""
-
-
-def _kmp_oracle() -> str:
-    """Unrolled-CTE oracle for kmeans_portable: Lloyd's iteration is
-    loop-carried, so KMP_ITERS rounds are spelled out. Distances use
-    the |v|^2 - 2 v.c + |c|^2 expansion; every centroid component and
-    every distance is rounded at 6 dp before any comparison (the
-    registry float contract), so argmin assignment cannot diverge
-    between engines."""
-    head = _kmp_head()
-    last = f"a{KMP_ITERS}"
-    return head + _kmp_round_ctes() + f""",
-    lab AS (
-        SELECT a.cluster, e.label, COUNT(*) AS n
-        FROM {last} a JOIN embeddings e USING (vec_id)
-        GROUP BY 1, 2
-    ),
-    mode AS (
-        SELECT cluster, label AS top_label, n AS top_n
-        FROM lab
-        QUALIFY ROW_NUMBER() OVER (
-            PARTITION BY cluster ORDER BY n DESC, label
-        ) = 1
-    )
-    SELECT a.cluster,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           ROUND(SUM(a.d2), 6) AS inertia,
-           m.top_label,
-           ROUND(m.top_n * 1.0 / COUNT(*), 6) AS purity
-    FROM {last} a JOIN mode m USING (cluster)
-    GROUP BY a.cluster, m.top_label, m.top_n
-    ORDER BY a.cluster
-    """
-
-
-def _kmp_spark_chain(spark: SparkSession, sf_dir: str):
-    """Memoized per (process, lake): `kmeans_portable` and
-    `silhouette_portable` consume the SAME chain, and the unrolled
-    per-round collects plus the final (vec, cluster) distance table
-    are built exactly once (the _copurchase_edges discipline; the
-    r9 settled bench showed the chain rebuilt per consumer as the
-    silhouette gate failure). The distance table is pinned with
-    localCheckpoint — k x vec rows, a bounded multiple of the
-    embeddings table."""
-    from ..memo import shared_intermediate
-
-    return shared_intermediate(
-        spark,
-        "kmp_chain",
-        (sf_dir,),
-        lambda: _kmp_spark_chain_impl(spark, sf_dir),
-    )
-
-
-def _kmp_spark_chain_impl(spark: SparkSession, sf_dir: str):
-    """Spark side of the shared portable-Lloyd chain (mirrors
-    `_kmp_round_ctes`): runs the KMP_ITERS unrolled rounds with the
-    per-round k x d centroid table COLLECTED and re-injected as a
-    literal (the O(model)-per-round contract that keeps the optimized
-    plan from re-deriving prior rounds), and returns (d2, assign,
-    emb): the FULL last-round (vec, cluster) rounded distance table,
-    its argmin assignment, and the embeddings frame. Consumed by
-    `kmeans_portable` (inertia/purity tail) and
-    `silhouette_portable` (second-best-distance tail)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vec = F.col("embedding").cast("array<double>")
-    seeds = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(KMP_K)
-    )
-    w_seed = Window.orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id"
-    )
-    seeded = seeds.select(
-        F.row_number().over(w_seed).alias("cluster"), "embedding"
-    )
-    vdim = emb.select("vec_id", F.posexplode(vec)).select(
-        "vec_id",
-        (F.col("pos") + 1).alias("dim"),
-        F.col("col").alias("val"),
-    )
-    v2 = vdim.groupBy("vec_id").agg(
-        F.sum(F.col("val") * F.col("val")).alias("v2")
-    )
-
-    def _pin(cdf: DataFrame) -> DataFrame:
-        # O(model) collect: k*d rows -> a LocalRelation literal.
-        rows = [
-            (int(r["cluster"]), int(r["dim"]), float(r["cval"]))
-            for r in cdf.collect()
-        ]
-        return literal_frame(
-            spark, "cluster int, dim int, cval double", rows
-        )
-
-    cdim = _pin(
-        seeded.select(
-            "cluster",
-            F.posexplode(F.col("embedding").cast("array<double>")),
-        ).select(
-            "cluster",
-            (F.col("pos") + 1).alias("dim"),
-            F.col("col").alias("cval"),
-        )
-    )
-    d2 = assign = None
-    for it in range(KMP_ITERS):
-        if it > 0:
-            cdim = _pin(cdim)
-        c2 = cdim.groupBy("cluster").agg(
-            F.sum(F.col("cval") * F.col("cval")).alias("c2")
-        )
-        dots = (
-            vdim.join(F.broadcast(cdim), "dim")
-            .groupBy("vec_id", "cluster")
-            .agg(F.sum(F.col("val") * F.col("cval")).alias("dot"))
-        )
-        d2 = (
-            dots.join(v2, "vec_id")
-            .join(F.broadcast(c2), "cluster")
-            .select(
-                "vec_id",
-                "cluster",
-                F.round(
-                    F.col("v2") - 2 * F.col("dot") + F.col("c2"), 6
-                ).alias("d2"),
-            )
-        )
-        w_min = Window.partitionBy("vec_id").orderBy("d2", "cluster")
-        assign = (
-            d2.withColumn("rn", F.row_number().over(w_min))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        cdim = (
-            assign.join(vdim, "vec_id")
-            .groupBy("cluster", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("cval"))
-        )
-    d2 = d2.localCheckpoint()
-    w_min = Window.partitionBy("vec_id").orderBy("d2", "cluster")
-    assign = (
-        d2.withColumn("rn", F.row_number().over(w_min))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return d2, assign, emb
-
-
-@query("kmeans_portable", oracle=_kmp_oracle())
+)
 def kmeans_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-verified k-means twin: 2 Lloyd rounds with k=4,
-    md5(vec_id)-order seeding (the SAME init rule as the
-    production `kmeans_clusters` loop above), unrolled as declarative
-    plan stages so DuckDB can replay it CTE-for-CTE — the clustering
-    family's answer to the minhash/simhash portable twins: the
-    production loop keeps its driver-held k x d matrix and GEMM
-    assignment (rows-only by contract), this twin hash-verifies the
-    Lloyd semantics value-for-value (assignments, inertia, label
-    purity per cluster).
-
-    In-plane form: vectors exploded to (vec_id, dim, val) ONCE;
-    each round is dim-keyed join against the 256-row centroid table
-    (broadcast), a (vec, cluster) partial-sum shuffle, an argmin
-    window partitioned by vec_id, and a (cluster, dim) mean.
-    The per-round centroid table is COLLECTED (k x d = 256 doubles,
-    the k-means O(model)-per-round contract) and re-injected as a
-    local relation: leaving it lazy made every downstream reference
-    re-derive all prior rounds, compounding to 25 scans of the base
-    relation in the optimized plan (the same disease the round-5
-    verdict flagged on pca_power_portable; caught for this query by
-    tests/test_plan_hygiene.py's scan-count guard). Distances
-    use |v|^2 - 2v.c + |c|^2 with 6-dp rounding before every argmin
-    so fp association order cannot flip an assignment; centroid
-    means are rounded at 6 dp on both engines BEFORE collection, so
-    the pinned literals are bit-identical to the lazy values."""
-    d2, assign, emb = _kmp_spark_chain(spark, sf_dir)
-    lab = (
-        assign.join(emb.select("vec_id", "label"), "vec_id")
-        .groupBy("cluster", "label")
-        .agg(F.count("*").alias("n"))
+    """Small k-means profile under the same contract as
+    `kmeans_clusters`: k=4, 2 assignment rounds (1 centroid update),
+    1-based cluster numbers, inertia and label purity at 6 dp. It
+    shares its fit with `silhouette_portable`."""
+    emb, centroids = _kmeans_fit(spark, sf_dir, KMP_K, KMP_ITERS - 1)
+    prof = _cluster_profile(
+        _assign(emb.select("embedding", "label"), centroids)
     )
-    w_mode = Window.partitionBy("cluster").orderBy(F.desc("n"), "label")
-    mode = (
-        lab.withColumn("rn", F.row_number().over(w_mode))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster",
-            F.col("label").alias("top_label"),
-            F.col("n").alias("top_n"),
-        )
-    )
-    return (
-        assign.groupBy("cluster")
-        .agg(
-            F.count("*").alias("n_vecs"),
-            F.round(F.sum("d2"), 6).alias("inertia"),
-        )
-        .join(F.broadcast(mode), "cluster")
-        .select(
-            "cluster",
-            "n_vecs",
-            "inertia",
-            "top_label",
-            F.round(F.col("top_n") / F.col("n_vecs"), 6).alias("purity"),
-        )
-        .orderBy("cluster")
-    )
+    return prof.select(
+        (F.col("cluster") + 1).alias("cluster"),
+        "n_vecs",
+        F.round("d2_sum", 6).alias("inertia"),
+        "top_label",
+        F.round(F.col("top_n") / F.col("n_vecs"), 6).alias("purity"),
+    ).orderBy("cluster")
 
 
 PCA_ITERS = 3  # unrolled power-iteration rounds
@@ -812,9 +683,9 @@ def pca_power_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     are SUFFICIENT STATISTICS for every power-iteration round —
     z = (G.v - (m.v) s)/n - m (s.v - n m.v)/n is algebraically the
     per-round z_d = (sum_i y_i x_id)/n - m_d (sum_i y_i)/n the
-    unrolled oracle computes. So the fit is ONE corpus pass (a
-    mapInArrow stage computing per-task (n, s, G) partials with a
-    native GEMM, guide §4.2) + O(d^2) driver arithmetic, instead of
+    unrolled oracle computes. So the fit is ONE corpus pass (the
+    shared ``_gram`` mapInArrow stage: per-task (n, s, G) partials
+    with a native GEMM) + O(d^2) driver arithmetic, instead of
     2 corpus shuffles and a model collect PER ROUND (r12: 56 Spark
     jobs, ~0.4 s scheduling floor each — the verdict's one flat
     top-10 entry; the 8-core ratio 0.58 showed the cost was serial
@@ -830,50 +701,8 @@ def pca_power_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's summation order is ~1e-12 relative — the same
     margin the r12 two-shuffle form already relied on — and the
     result is oracle-hash-verified at sf0.001/0.01/0.1."""
-    import numpy as np
-    import pyarrow as pa
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    xmat = emb.select(F.col("embedding").cast("array<double>").alias("x"))
-
-    def _gram_partials(batches):
-        n = 0
-        s = None
-        g = None
-        for b in batches:
-            col = b.column(0)
-            if len(col) == 0:
-                continue
-            flat = np.asarray(col.flatten(), dtype=np.float64)
-            x = flat.reshape(len(col), len(flat) // len(col))
-            n += x.shape[0]
-            cs = x.sum(axis=0)
-            gg = x.T @ x
-            s = cs if s is None else s + cs
-            g = gg if g is None else g + gg
-        if s is None:
-            return
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([n], type=pa.int64()),
-                pa.array([s.tolist()], type=pa.list_(pa.float64())),
-                pa.array(
-                    [g.reshape(-1).tolist()], type=pa.list_(pa.float64())
-                ),
-            ],
-            names=["n", "s", "g"],
-        )
-
-    parts = xmat.mapInArrow(
-        _gram_partials, "n long, s array<double>, g array<double>"
-    ).collect()  # O(d^2) per task — the model, never the corpus
-    n = float(sum(r["n"] for r in parts))
-    d = len(parts[0]["s"])
-    s = np.zeros(d)
-    g = np.zeros((d, d))
-    for r in parts:
-        s += np.asarray(r["s"], dtype=np.float64)
-        g += np.asarray(r["g"], dtype=np.float64).reshape(d, d)
+    n, s, g = _gram(load_table(spark, sf_dir, "embeddings"))
+    d = len(s)
     m = s / n
     tv = float(np.sum(np.diag(g) / n - m * m))
     v = np.full(d, 0.125)
@@ -1231,7 +1060,7 @@ def label_centroid_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _silhouette_oracle() -> str:
     last = f"a{KMP_ITERS}"
     dlast = f"d{KMP_ITERS}"
-    return _kmp_head() + _kmp_round_ctes() + f""",
+    return _kmp_head(KMP_K) + _kmp_round_ctes(KMP_ITERS) + f""",
     bmin AS (
         SELECT d.vec_id, MIN(d.d2) AS b2
         FROM {dlast} d JOIN {last} a USING (vec_id)
@@ -1277,34 +1106,24 @@ def silhouette_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     and is exact for the within-cluster-mean geometry k-means
     optimizes.
 
-    Scale shape: rides the SAME unrolled portable-Lloyd chain as
-    `kmeans_portable` (shared `_kmp_spark_chain` / `_kmp_round_ctes`
-    — one extra k-row min per vector over the final k-distance
-    table, no new corpus pass, no pairwise term). All distances are
-    6-dp-pinned before the min/ratio, so s is engine-exact."""
-    d2, assign, _ = _kmp_spark_chain(spark, sf_dir)
-    own = assign.select(
-        "vec_id",
-        F.col("cluster").alias("own_cluster"),
-        F.col("d2").alias("a2"),
+    Scale shape: the SAME fit as `kmeans_portable` and one
+    `_assign` pass, whose runner-up distance is b -- no new corpus
+    pass, no pairwise term. Both distances are 6-dp-pinned before the
+    ratio, so s is engine-exact. A vector with no other live cluster
+    has no b and is left out, as the oracle's join leaves it out."""
+    emb, centroids = _kmeans_fit(spark, sf_dir, KMP_K, KMP_ITERS - 1)
+    assigned = _assign(emb.select("embedding"), centroids).filter(
+        F.col("d2b").isNotNull()
     )
-    bmin = (
-        d2.join(own, "vec_id")
-        .filter(F.col("cluster") != F.col("own_cluster"))
-        .groupBy("vec_id")
-        .agg(F.min("d2").alias("b2"))
-    )
-    sa = F.sqrt(F.greatest(F.col("a2"), F.lit(0.0)))
-    sb = F.sqrt(F.greatest(F.col("b2"), F.lit(0.0)))
+    sa = F.sqrt(F.greatest(F.col("d2"), F.lit(0.0)))
+    sb = F.sqrt(F.greatest(F.col("d2b"), F.lit(0.0)))
     s = F.round(
         F.when(F.greatest(sa, sb) == 0, 0.0).otherwise(
             (sb - sa) / F.greatest(sa, sb)
         ),
         6,
     )
-    sil = own.join(bmin, "vec_id").select(
-        F.col("own_cluster").alias("cluster"), s.alias("s")
-    )
+    sil = assigned.select((F.col("cluster") + 1).alias("cluster"), s.alias("s"))
     return (
         sil.groupBy("cluster")
         .agg(

@@ -20,10 +20,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    Env overrides: ``SPARK_GRAFT_CPUS`` (local parallelism),
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+    Env overrides: ``SPARK_GRAFT_CPUS`` (local parallelism, default
+    the host's core count), ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

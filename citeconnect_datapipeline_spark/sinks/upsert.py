@@ -65,6 +65,7 @@ def upsert_parquet(
     a table format with row-level merge (Delta/Iceberg) — same logical
     plan, cheaper physical swap.
     """
+    _recover_swap(target_path)
     fresh = (
         dedup_keep_first(new_rows, key, order_cols)
         if order_cols
@@ -78,17 +79,7 @@ def upsert_parquet(
         to_insert = fresh
         merged = fresh
     inserted = to_insert.count()
-    staging = f"{target_path}.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        old = f"{target_path}.old"
-        os.rename(target_path, old)
-        os.rename(staging, target_path)
-        import shutil
-
-        shutil.rmtree(old)
-    else:
-        os.rename(staging, target_path)
+    _swap_in(merged, target_path)
     return inserted
 
 
@@ -289,25 +280,49 @@ def jdbc_upsert(
     }
 
 
-def _recover_swap(target_path: str) -> None:
-    """Roll an interrupted atomic swap to a consistent state. The
-    swap protocol is: (1) rename target -> target.old, (2) rename
-    staging -> target  [COMMIT POINT], (3) rmtree target.old. A crash
-    between (1) and (2) leaves only target.old -> roll BACK (the
-    merge never committed; restore the original). A crash between
-    (2) and (3) leaves both -> roll FORWARD (drop the old copy).
-    Stale staging dirs are removed either way."""
+def _remove_table(path: str) -> None:
+    """Delete a parquet table: a Spark-written directory or a single
+    parquet file (the layout of a table written by other tools)."""
     import shutil
 
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    else:
+        os.remove(path)
+
+
+def _swap_in(merged: DataFrame, target_path: str) -> None:
+    """Write ``merged`` to a staging dir and swap it in: (1) rename
+    target -> target.old, (2) rename staging -> target  [COMMIT
+    POINT], (3) remove target.old. A file target comes back as a
+    directory."""
+    staging = f"{target_path}.staging"
+    merged.write.mode("overwrite").parquet(staging)
+    if os.path.exists(target_path):
+        old = f"{target_path}.old"
+        os.rename(target_path, old)
+        os.rename(staging, target_path)
+        _remove_table(old)
+    else:
+        os.rename(staging, target_path)
+
+
+def _recover_swap(target_path: str) -> None:
+    """Roll a swap (``_swap_in``) cut between its steps to a
+    consistent state. A crash between (1) and (2) leaves only
+    target.old -> roll BACK (the merge never committed; restore the
+    original). A crash between (2) and (3) leaves both -> roll
+    FORWARD (drop the old copy). Stale staging dirs are removed
+    either way."""
     old = f"{target_path}.old"
     staging = f"{target_path}.staging"
     if os.path.exists(old):
         if os.path.exists(target_path):
-            shutil.rmtree(old)  # crashed after commit point
+            _remove_table(old)  # crashed after commit point
         else:
             os.rename(old, target_path)  # crashed before commit point
     if os.path.exists(staging):
-        shutil.rmtree(staging)
+        _remove_table(staging)
 
 
 def merge_parquet(
@@ -410,17 +425,7 @@ def merge_parquet(
             0,
         )
 
-    staging = f"{target_path}.staging"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(target_path):
-        import shutil
-
-        old = f"{target_path}.old"
-        os.rename(target_path, old)
-        os.rename(staging, target_path)
-        shutil.rmtree(old)
-    else:
-        os.rename(staging, target_path)
+    _swap_in(merged, target_path)
     return {
         "inserted": n_inserted,
         "updated": n_updated,

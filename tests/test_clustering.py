@@ -48,6 +48,59 @@ def test_kmeans_sizes_and_inertia_match_numpy(spark, sf_dir, vecs):
         assert int(sel.sum()) == r["n_vecs"]
         assert abs(float(d2[sel].sum()) - r["inertia"]) < 1e-2
 
+def test_round6_is_spark_round_bit_for_bit():
+    from citeconnect_datapipeline_spark.functions.rounding import spark_round
+    from citeconnect_datapipeline_spark.operators.clustering import _round6
+
+    rng = np.random.default_rng(3)
+    x = np.concatenate(
+        [
+            rng.normal(size=4000) * 10.0 ** rng.integers(-7, 5, size=4000),
+            # exact .5 ties at the 7th decimal, both signs
+            (rng.integers(-10**9, 10**9, size=2000) + 0.5) / 1e6,
+            [0.0, -0.0, 5e-7, -5e-7, -4e-7, 1.2345675],
+        ]
+    )
+    want = np.array([spark_round(v) for v in x])
+    assert np.array_equal(_round6(x).view(np.int64), want.view(np.int64))
+
+
+def test_kmeans_fit_matches_numpy_lloyd_with_6dp_rounding(
+    spark, sf_dir, vecs
+):
+    """Reference Lloyd's loop in plain numpy + the scalar
+    spark_round: 6-dp distances before the argmin (ties to the lowest
+    cluster), 6-dp centroid means, emptied clusters dropped. The
+    Spark fit must reproduce its centroids exactly."""
+    import hashlib
+
+    from citeconnect_datapipeline_spark.functions.rounding import spark_round
+
+    rnd = np.vectorize(spark_round)
+    ids, M = vecs
+    seeds = sorted(
+        range(len(ids)),
+        key=lambda i: (hashlib.md5(str(ids[i]).encode()).hexdigest(), ids[i]),
+    )[:K_CLUSTERS]
+    C = M[seeds].copy()
+    live = np.ones(K_CLUSTERS, dtype=bool)
+    for _ in range(5):
+        d2 = rnd(
+            (M * M).sum(axis=1)[:, None]
+            - 2.0 * (M @ C.T)
+            + (C * C).sum(axis=1)[None, :]
+        )
+        d2[:, ~live] = np.inf
+        a = d2.argmin(axis=1)
+        for c in range(K_CLUSTERS):
+            sel = a == c
+            live[c] = bool(sel.any())
+            C[c] = rnd(M[sel].sum(axis=0) / sel.sum()) if live[c] else 0.0
+    _, got = _kmeans_fit(spark, sf_dir)
+    assert np.array_equal(np.isnan(got[:, 0]), ~live)
+    assert np.array_equal(got[live], C[live])
+
+
 def test_kmeans_deterministic_across_reruns(spark, sf_dir):
     a = [tuple(r) for r in kmeans_clusters(spark, sf_dir).collect()]
     b = [tuple(r) for r in kmeans_clusters(spark, sf_dir).collect()]
@@ -142,3 +195,60 @@ def test_materialized_intermediates_valid_across_sessions(spark, sf_dir):
     assert second is first  # same context id -> cache hit
     counts2 = sorted((r["v"], r["label"]) for r in second.collect())
     assert counts1 == counts2
+
+
+@pytest.mark.parametrize(
+    "name,k", [("kmeans_portable", 4), ("kmeans_clusters", K_CLUSTERS)]
+)
+def test_kmeans_tied_seed_cluster_is_dropped_like_the_oracle(
+    spark, tmp_path, name, k
+):
+    """The second md5-ordered seed is an exact copy of the first, so
+    seed cluster 2 ties cluster 1 on every vector, loses every tie
+    (lowest cluster wins) and empties in round 1. Both engines drop
+    it and keep the other seed numbers; Spark equals the oracle."""
+    import hashlib
+    import math
+
+    import duckdb
+
+    from citeconnect_datapipeline_spark.plans.registry import (
+        get_oracles,
+        get_queries,
+    )
+
+    rng = np.random.default_rng(7)
+    ids = list(range(60))
+    first, second = sorted(
+        ids, key=lambda v: (hashlib.md5(str(v).encode()).hexdigest(), v)
+    )[:2]
+    vec = {v: (rng.integers(-40, 40, size=8) / 8.0).tolist() for v in ids}
+    vec[second] = list(vec[first])
+    rows = [(v, vec[v], int(rng.integers(0, 3))) for v in ids]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).coalesce(1).write.parquet(path)
+
+    got = get_queries()[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    want = con.execute(get_oracles()[name]).fetchdf()
+    con.close()
+
+    id_col = "cluster" if name == "kmeans_portable" else "cluster_id"
+    seed2 = 2 if id_col == "cluster" else 1
+    assert seed2 not in set(got[id_col])
+    assert len(got) < k
+    assert sorted(got.columns) == sorted(want.columns)
+    g = got.sort_values(id_col).reset_index(drop=True)
+    w = want.sort_values(id_col).reset_index(drop=True)
+    assert len(g) == len(w)
+    for col in g.columns:
+        for a, b in zip(g[col], w[col]):
+            if isinstance(a, float) or isinstance(b, float):
+                assert math.isclose(a, b, rel_tol=1e-9, abs_tol=2e-6), col
+            else:
+                assert int(a) == int(b), col

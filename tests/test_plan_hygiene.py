@@ -223,15 +223,17 @@ BUILD_EXECUTES = {
     "ann_pq_portable",  # collects the M*K*ds=256-double codebook once
     "bpe_merge_ranks",  # merge loop collects 1 argmax row per round
     "bpe_portable",  # same contract: 1 argmax row per unrolled round
-    "embedding_pca_whiten",  # collects d + d^2 Gram/mean partials
+    "embedding_pca_whiten",  # collects the shared Gram pass's
+    # per-task (n, column sums, X'X) partials
     "fellegi_sunter_em",  # eager-checkpoints the 16-row agreement
     # pattern table the EM SQL re-references
     "kcore_peel_stats",  # eager-checkpoints the edge list per peel
     # round (the CC-loop contract)
     "kmeans_clusters",  # k-means fit collects k*d centroid partials
-    "silhouette_portable",  # rides the same pinned portable-Lloyd
-    # chain (k*d collect per round) as kmeans_portable
-    "kmeans_portable",  # pins the k*d centroid table per Lloyd round
+    "silhouette_portable",  # the same k-means fit as kmeans_portable
+    # (k*d partial sums collected per Lloyd round)
+    "kmeans_portable",  # k-means fit collects k*d partial sums per
+    # Lloyd round
     "logreg_adagrad_portable",  # pins the 257-row weight table per
     # AdaGrad round (O(model) collect, the logreg_fit contract)
     "neardup_cluster_histogram",  # shares the CC loop

@@ -202,6 +202,61 @@ def test_upsert_parquet_idempotent(spark, tmp_path):
     assert spark.read.parquet(target).count() == 1
 
 
+def test_upsert_parquet_into_single_file_table(spark, sf_dir, tmp_path):
+    """The lake's tables are single parquet FILES. The swap removes
+    the old file (a directory removal raises NotADirectoryError on
+    it), and the table comes back as a directory with the new rows."""
+    import shutil
+
+    target = str(tmp_path / "documents.parquet")
+    shutil.copyfile(os.path.join(sf_dir, "documents.parquet"), target)
+    n = spark.read.parquet(target).count()
+    docs = spark.read.parquet(target).orderBy("doc_id").limit(8)
+    # 5 re-keyed copies (inserted) + 3 existing keys (ignored)
+    batch = docs.limit(5).withColumn(
+        "doc_id", F.col("doc_id") + 10**6
+    ).unionByName(docs.limit(3))
+    assert upsert_parquet(spark, batch, target, "doc_id") == 5
+    assert spark.read.parquet(target).count() == n + 5
+    assert os.path.isdir(target)
+    assert not os.path.exists(f"{target}.old")
+    assert not os.path.exists(f"{target}.staging")
+
+
+def test_recover_swap_on_single_file_table(spark, sf_dir, tmp_path):
+    """A swap cut before its commit rename rolls BACK to the original
+    file; one cut after it rolls FORWARD and drops the old file.
+    upsert_parquet recovers before it reads the target."""
+    import shutil
+
+    from citeconnect_datapipeline_spark.sinks.upsert import _recover_swap
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    target = str(tmp_path / "documents.parquet")
+    old, staging = f"{target}.old", f"{target}.staging"
+    n = spark.read.parquet(src).count()
+
+    # cut between rename(target, old) and rename(staging, target)
+    shutil.copyfile(src, old)
+    spark.read.parquet(src).limit(1).write.parquet(staging)
+    _recover_swap(target)
+    assert os.path.isfile(target)
+    assert not os.path.exists(old) and not os.path.exists(staging)
+    assert spark.read.parquet(target).count() == n
+
+    # cut after the commit rename, before the old file is removed;
+    # the next upsert finishes the swap first
+    spark.read.parquet(target).write.parquet(str(tmp_path / "new"))
+    os.rename(target, old)
+    os.rename(str(tmp_path / "new"), target)
+    fresh = spark.read.parquet(target).limit(1).withColumn(
+        "doc_id", F.lit(10**6).cast("long")
+    )
+    assert upsert_parquet(spark, fresh, target, "doc_id") == 1
+    assert not os.path.exists(old)
+    assert spark.read.parquet(target).count() == n + 1
+
+
 def test_foreach_partition_upsert_batches(spark, tmp_path):
     """Writer double records every batch to per-task files; asserts
     batch sizing and completeness without a real database."""
