@@ -93,6 +93,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_version(path: str) -> tuple:
+    """Version stamp of a lake table on the local filesystem: the
+    sorted ``(relative path, size, mtime_ns)`` of every file under
+    ``path``, from one driver-side ``os.walk`` (no Spark job). Spark
+    names each written part file with a fresh job UUID, so a rewrite
+    into the same directory always changes the stamp. A missing or
+    non-local path stamps as ``()``, which callers treat as "unknown"
+    and never cache against."""
+    out = []
+    for root, _, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            out.append(
+                (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+            )
+    return tuple(sorted(out))
+
+
 def spread_small_source(df: DataFrame, *cols: str) -> DataFrame:
     """Fan a COMPACT source out to full parallelism — only when it is
     actually under-partitioned. Heavy per-row work (interpreted HOF

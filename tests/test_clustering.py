@@ -252,3 +252,38 @@ def test_kmeans_tied_seed_cluster_is_dropped_like_the_oracle(
                 assert math.isclose(a, b, rel_tol=1e-9, abs_tol=2e-6), col
             else:
                 assert int(a) == int(b), col
+
+
+def test_workers_import_the_package_outside_the_repo_root(tmp_path, sf_dir):
+    """``get_spark`` ships the package's parent directory to the Python
+    workers: ``kmeans_portable`` (whose Arrow kernels call module-level
+    helpers) runs in a process started in an unrelated directory with
+    no ``PYTHONPATH``."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from citeconnect_datapipeline_spark.plans.registry import get_queries\n"
+        "from citeconnect_datapipeline_spark.session import get_spark\n"
+        "spark = get_spark(master='local[2]')\n"
+        "q = get_queries()['kmeans_portable']\n"
+        f"print('ROWS', len(q(spark, {sf_dir!r}).collect()))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert "ModuleNotFoundError" not in proc.stderr, proc.stderr[-4000:]
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ROWS " in proc.stdout, proc.stdout

@@ -8,6 +8,7 @@ regressing a scan into a full read.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from citeconnect_datapipeline_spark.plans.registry import get_queries
@@ -224,6 +225,108 @@ def test_ivf_index_search_prunes_partitions(spark, tmp_path):
     assert len(rows) == 10
     # the query vector itself lives in a probed list -> similarity 1.0
     assert rows[0].vec_id == 0 and abs(rows[0].similarity - 1.0) < 1e-6
+
+
+def test_ivf_index_rebuild_in_place_is_never_stale(spark, tmp_path):
+    """A search opens the index once per version: rebuilding it into
+    the same directory from different vectors must make the next
+    search read the new files, not the first build's."""
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        build_ivf_index,
+        search_ivf_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    idx = str(tmp_path / "ivf")
+    build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), idx)
+    q_even = emb.filter(F.col("vec_id") == 0).first().embedding
+    assert search_ivf_index(spark, idx, q_even).first().vec_id == 0
+
+    build_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), idx)
+    q_odd = emb.filter(F.col("vec_id") == 1).first().embedding
+    rows = search_ivf_index(spark, idx, q_odd).collect()
+    assert rows[0].vec_id == 1 and abs(rows[0].similarity - 1.0) < 1e-6
+    assert all(r.vec_id % 2 == 1 for r in rows), rows
+
+
+@pytest.fixture(scope="module")
+def ivf_index(spark, tmp_path_factory):
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        build_ivf_index,
+    )
+
+    idx = str(tmp_path_factory.mktemp("ivf") / "index")
+    build_ivf_index(load_table(spark, SF_DIR, "embeddings"), idx)
+    return idx
+
+
+def test_ivf_warm_probe_is_one_job_with_pruned_scan(spark, ivf_index):
+    """Once the index is open, a probe is one Spark job: no centroid
+    read, no listing, no schema inference — and the scan still prunes
+    to the probed ``list_id`` partitions."""
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        search_ivf_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    qs = [r.embedding for r in emb.orderBy("vec_id").limit(2).collect()]
+    search_ivf_index(spark, ivf_index, qs[0]).collect()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-warm-probe", "warm probe")
+    try:
+        out = search_ivf_index(spark, ivf_index, qs[1])
+        rows = out.collect()
+    finally:
+        sc.setJobGroup("ivf-warm-probe-done", "idle")
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf-warm-probe")) == 1
+    assert len(rows) == 10
+    plan = physical(out)
+    assert "TakeOrderedAndProject" in plan, plan
+    pruning_clause = plan.split("PartitionFilters")[1].split("]")[0]
+    assert "list_id" in pruning_clause, plan
+
+
+def test_ivf_probe_rows_equal_numpy_brute_force(spark, ivf_index):
+    """The probe's rows are exactly a numpy cosine over the vectors of
+    the nprobe nearest lists, rounded like Spark's 6-dp ``round``,
+    ordered by similarity desc then vec_id; the caller's query array
+    is left as it was."""
+    import numpy as np
+
+    from citeconnect_datapipeline_spark.functions.rounding import spark_round
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        IVF_NPROBE,
+        search_ivf_index,
+    )
+
+    cents = sorted(spark.read.parquet(f"{ivf_index}/centroids").collect())
+    cmat = np.array([r.centroid for r in cents])
+    vecs = spark.read.parquet(f"{ivf_index}/vectors").collect()
+    q = np.asarray(
+        load_table(spark, SF_DIR, "embeddings")
+        .filter(F.col("vec_id") == 7)
+        .first()
+        .embedding,
+        dtype="float64",
+    )
+    q_before = q.copy()
+    got = [
+        (r.vec_id, r.label, r.similarity)
+        for r in search_ivf_index(spark, ivf_index, q, k=10).collect()
+    ]
+    assert np.array_equal(q, q_before)
+
+    qn = q / np.linalg.norm(q)
+    probe = set(np.argsort(-(cmat @ qn))[:IVF_NPROBE].tolist())
+    cand = [r for r in vecs if r.list_id in probe]
+    mat = np.array([r.embedding for r in cand], dtype="float64")
+    cos = (mat @ qn) / np.linalg.norm(mat, axis=1)
+    want = sorted(
+        ((r.vec_id, r.label, spark_round(c, 6)) for r, c in zip(cand, cos)),
+        key=lambda t: (-t[2], t[0]),
+    )[:10]
+    assert got == want
 
 
 def test_sketch_rollup_estimates_within_bounds(spark):

@@ -346,6 +346,30 @@ def test_hash_projection_model_empty_batch():
     assert HashProjectionModel.get().encode([]) == []
 
 
+def test_fake_model_embeds_null_text_as_empty_document(spark):
+    """NULL text is the empty document: ``embed_with_model`` with the
+    injected fake gives a NULL-text row the vector of ``''`` instead
+    of crashing the worker."""
+    import numpy as np
+
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        _FakeModel,
+        embed_with_model,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "spark")], "doc_id long, text string"
+    )
+    vecs = {
+        r.doc_id: r.embedding
+        for r in embed_with_model(docs, _FakeModel.get).collect()
+    }
+    assert vecs[1] == vecs[2] != vecs[3]
+    # the embedding column is array<float>: compare at float32
+    empty = np.float32(_FakeModel.get().encode([""])[0])
+    assert np.array_equal(np.float32(vecs[2]), empty)
+
+
 # ----------------- jdbc_upsert against a REAL embedded DB -----------
 
 
