@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 
@@ -32,21 +31,9 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
         )
 
-    # Python workers start from a fresh interpreter: put the package's
-    # parent directory on their path (ahead of any value the launched
-    # JVM already carries) so Arrow kernels that call module-level
-    # helpers import the package from any working directory.
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    worker_path = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
-    if pkg_parent not in worker_path.split(os.pathsep):
-        worker_path = os.pathsep.join(
-            p for p in (pkg_parent, worker_path) if p
-        )
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.executorEnv.PYTHONPATH", worker_path)
         # Deterministic semantics across engines (DuckDB oracle parity).
         .config("spark.sql.session.timeZone", "UTC")
         # Adaptive execution: runtime partition coalescing, skew-join
@@ -101,4 +88,20 @@ def get_spark(
             ),
         )
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Python workers start from a fresh interpreter: put the package's
+    # parent directory on their path so Arrow kernels that call
+    # module-level helpers import the package from any working
+    # directory. ``environment`` already holds every
+    # ``spark.executorEnv.*`` value, whatever set it (spark-defaults,
+    # --conf, PYSPARK_SUBMIT_ARGS), and is sent with each Python
+    # function, so the package is prepended to that value, not put in
+    # its place.
+    env = spark.sparkContext.environment
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = env.get("PYTHONPATH", "")
+    if pkg_parent not in worker_path.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (pkg_parent, worker_path) if p
+        )
+    return spark

@@ -258,12 +258,17 @@ def test_workers_import_the_package_outside_the_repo_root(tmp_path, sf_dir):
     """``get_spark`` ships the package's parent directory to the Python
     workers: ``kmeans_portable`` (whose Arrow kernels call module-level
     helpers) runs in a process started in an unrelated directory with
-    no ``PYTHONPATH``."""
+    no ``PYTHONPATH``. A worker ``PYTHONPATH`` the deployment already
+    set (here through ``--conf``, before the JVM starts) is kept: the
+    workers still import a module that only it provides."""
     import os
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    extra = tmp_path / "extra"
+    extra.mkdir()
+    (extra / "extra_mod.py").write_text("VALUE = 7\n")
     script = (
         "import sys\n"
         f"sys.path.insert(0, {repo!r})\n"
@@ -272,10 +277,16 @@ def test_workers_import_the_package_outside_the_repo_root(tmp_path, sf_dir):
         "spark = get_spark(master='local[2]')\n"
         "q = get_queries()['kmeans_portable']\n"
         f"print('ROWS', len(q(spark, {sf_dir!r}).collect()))\n"
+        "rdd = spark.sparkContext.parallelize([0, 1], 2)\n"
+        "print('EXTRA', sum(rdd.map(lambda _: __import__('extra_mod').VALUE)"
+        ".collect()))\n"
         "spark.stop()\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    env["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.executorEnv.PYTHONPATH={extra} pyspark-shell"
+    )
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd=tmp_path,
@@ -287,3 +298,4 @@ def test_workers_import_the_package_outside_the_repo_root(tmp_path, sf_dir):
     assert "ModuleNotFoundError" not in proc.stderr, proc.stderr[-4000:]
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "ROWS " in proc.stdout, proc.stdout
+    assert "EXTRA 14" in proc.stdout, proc.stderr[-4000:]

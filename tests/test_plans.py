@@ -287,6 +287,24 @@ def test_ivf_warm_probe_is_one_job_with_pruned_scan(spark, ivf_index):
     assert "list_id" in pruning_clause, plan
 
 
+def test_ivf_probe_from_another_session_reopens_there(spark, ivf_index):
+    """The open index is kept per directory for ONE session: a probe
+    from another session of the same application (its own SQL conf)
+    reopens the index in that session, replacing the directory's
+    entry."""
+    from citeconnect_datapipeline_spark.operators.similarity import (
+        _IVF_OPEN,
+        search_ivf_index,
+    )
+
+    q = load_table(spark, SF_DIR, "embeddings").first().embedding
+    assert search_ivf_index(spark, ivf_index, q).sparkSession is spark
+    other = spark.newSession()
+    assert search_ivf_index(other, ivf_index, q).sparkSession is other
+    assert _IVF_OPEN[ivf_index][0] is other
+    assert search_ivf_index(spark, ivf_index, q).sparkSession is spark
+
+
 def test_ivf_probe_rows_equal_numpy_brute_force(spark, ivf_index):
     """The probe's rows are exactly a numpy cosine over the vectors of
     the nprobe nearest lists, rounded like Spark's 6-dp ``round``,
