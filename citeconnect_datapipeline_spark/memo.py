@@ -14,15 +14,22 @@ implementation of the share-per-process pattern:
   caller-supplied name and key parts;
 - per-KEY locking: the first consumer builds while later consumers
   of the SAME key wait; unrelated keys build concurrently;
-- entries live for the process (the lake is immutable per
-  TESTDATA.md and every cached build is deterministic, so entries
-  cannot go stale); ``invalidate()`` exists for tests.
+- every entry is stamped with the ``table_version`` of its lake dir
+  (``key_parts[0]``: the listed name, size and mtime of every file
+  under it, one driver-side walk, no Spark job). A lookup whose stamp
+  differs — an upsert appended to a table, a table was rewritten —
+  unpersists the old artifact and rebuilds, so an answer never comes
+  from an older lake. A lake the driver cannot list (not on the local
+  filesystem) stamps ``()`` and its entries live for the process;
+  ``invalidate()`` drops entries by hand.
 """
 
 from __future__ import annotations
 
 import threading
 from typing import Any, Callable
+
+from .sources.tables import table_version
 
 _CACHE: dict = {}
 _LOCKS: dict = {}
@@ -33,16 +40,22 @@ def shared_intermediate(
     spark, name: str, key_parts: tuple, build: Callable[[], Any]
 ) -> Any:
     """Return the cached artifact for (app, name, *key_parts),
-    building it exactly once per process via ``build()``."""
+    building it once per process and version of the lake dir
+    ``key_parts[0]`` via ``build()``."""
     key = (spark.sparkContext.applicationId, name, *key_parts)
-    if key in _CACHE:
-        return _CACHE[key]
+    version = table_version(key_parts[0])
+    hit = _CACHE.get(key)
+    if hit is not None and hit[0] == version:
+        return hit[1]
     with _GLOBAL:
         lock = _LOCKS.setdefault(key, threading.Lock())
     with lock:
-        if key not in _CACHE:
-            _CACHE[key] = build()
-    return _CACHE[key]
+        hit = _CACHE.get(key)
+        if hit is None or hit[0] != version:
+            if hit is not None:
+                _unpersist_artifact(hit[1])
+            hit = _CACHE[key] = (version, build())
+    return hit[1]
 
 
 def _unpersist_artifact(obj: Any) -> None:
@@ -84,5 +97,5 @@ def invalidate(name: str | None = None) -> None:
         for k in [
             k for k in _CACHE if name is None or k[1] == name
         ]:
-            _unpersist_artifact(_CACHE.pop(k, None))
+            _unpersist_artifact(_CACHE.pop(k, (None, None))[1])
             _LOCKS.pop(k, None)

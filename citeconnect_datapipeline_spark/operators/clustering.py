@@ -140,9 +140,10 @@ def _kmeans_fit(
     (context, lake dir, k, iters): kmeans_clusters and semantic_dedup
     consume the SAME model, as do kmeans_portable and
     silhouette_portable, and a production pipeline fits it once at
-    ingest (as build_ivf_index materializes its index). The lake is
-    immutable per TESTDATA.md, and the fit is deterministic
-    (hash-ordered init), so entries cannot go stale or drift."""
+    ingest (as build_ivf_index materializes its index). An entry is
+    refit when the lake dir's ``table_version`` changes, and the fit
+    is deterministic (hash-ordered init), so entries cannot go stale
+    or drift."""
     from ..memo import shared_intermediate
 
     return shared_intermediate(

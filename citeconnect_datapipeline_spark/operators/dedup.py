@@ -622,8 +622,9 @@ def _neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan. The label table is already eagerly localCheckpoint-ed by
     ``connected_components`` (a small materialized RDD on the shared
     SparkContext, valid across ``newSession`` clones); the cache key
-    is (context id, sf_dir) and the lake is immutable per
-    TESTDATA.md, so entries cannot go stale within a process."""
+    is (context id, sf_dir), and an entry is rebuilt when the lake
+    dir's ``table_version`` changes (an upsert into documents), so it
+    never answers for an older lake."""
     from .graph import connected_components
 
     from ..memo import shared_intermediate

@@ -16,6 +16,7 @@ query probes a few buckets instead of every row.
 from __future__ import annotations
 
 import math
+import os
 
 import pandas as pd
 
@@ -722,30 +723,65 @@ _IVF_OPEN: dict = {}
 
 def _open_ivf_index(spark: SparkSession, index_dir: str):
     """The per-index work of a probe, done once per index VERSION:
-    the centroid matrix (one collect), the vectors DataFrame (its
-    file index listed and its schema inferred once) and the score
-    Column over ``embedding`` and a ``qvec`` column. The score does
-    not depend on the index, but building its three higher-order
-    dots costs dozens of py4j calls, so it is built with the entry
-    rather than per probe (embed_search run_s 2.997 -> 2.852 s, 10 of
-    10 interleaved pairs on a 4-core box). The version is
-    `table_version` of ``index_dir`` — a driver-side walk, no Spark
+    the centroid matrix, the vectors DataFrame (its file index listed
+    once) and the score Column over ``embedding`` and a ``qvec``
+    column. The score does not depend on the index, but building its
+    three higher-order dots costs dozens of py4j calls, so it is built
+    with the entry rather than per probe (embed_search run_s 2.997 ->
+    2.852 s, 10 of 10 interleaved pairs on a 4-core box). The version
+    is `table_version` of ``index_dir`` — a driver-side walk, no Spark
     job — so a rebuild into the same directory (fresh part-file
     names) always reopens, and so does a probe from another session,
     which must plan under its own SQL conf. A version of ``()`` (a
     path the driver cannot list: not on the local filesystem) is
-    never cached."""
+    never cached.
+
+    Opening a local index runs no Spark job: the centroids are read
+    with pyarrow on the driver, and the vectors with the schema
+    `build_ivf_index` wrote, taken from one part file's footer (Spark
+    keeps it there) plus the ``list_id`` partition column, so Spark
+    infers nothing. An index Spark cannot be asked about that way (a
+    remote path, a footer without Spark's schema) is read and
+    inferred by Spark."""
+    import json
+
     import numpy as np
+    import pyarrow.parquet as pq
 
     version = table_version(index_dir)
     hit = _IVF_OPEN.get(index_dir)
     if version and hit is not None and hit[0] is spark and hit[1] == version:
         return hit[2:]
-    cent_rows = spark.read.parquet(f"{index_dir}/centroids").collect()
-    cents = np.zeros((len(cent_rows), len(cent_rows[0].centroid)))
+    if version:
+        cent_rows = pq.read_table(f"{index_dir}/centroids").to_pylist()
+    else:
+        cent_rows = [
+            r.asDict()
+            for r in spark.read.parquet(f"{index_dir}/centroids").collect()
+        ]
+    cents = np.zeros((len(cent_rows), len(cent_rows[0]["centroid"])))
     for r in cent_rows:
-        cents[r.list_id] = r.centroid
-    vectors = spark.read.parquet(f"{index_dir}/vectors")
+        cents[r["list_id"]] = r["centroid"]
+    reader = spark.read
+    part = next(
+        (
+            path
+            for path, _size, _mtime in version
+            if path.startswith(f"vectors{os.sep}")
+            and path.endswith(".parquet")
+        ),
+        None,
+    )
+    if part is not None:
+        meta = pq.read_schema(os.path.join(index_dir, part)).metadata or {}
+        spark_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        if spark_schema is not None:
+            reader = reader.schema(
+                StructType.fromJson(json.loads(spark_schema)).add(
+                    "list_id", IntegerType()
+                )
+            )
+    vectors = reader.parquet(f"{index_dir}/vectors")
     score = F.round(
         _cosine(F.col("embedding").cast("array<double>"), F.col("qvec")), 6
     ).alias("similarity")

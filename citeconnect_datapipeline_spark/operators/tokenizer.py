@@ -51,9 +51,10 @@ def _merges_for(spark: SparkSession, sf_dir: str):
     query (bpe_merge_ranks) and the apply-side query
     (bpe_encode_stats) — a production tokenizer trains once and
     ships merges.txt; retraining per consuming query would be
-    benchmarking an anti-pattern. Keyed by (context id, sf_dir);
-    the lake is immutable per TESTDATA.md. Direct callers of
-    train_bpe_merges (tests, custom corpora) stay uncached."""
+    benchmarking an anti-pattern. Keyed by (context id, sf_dir) and
+    rebuilt when the lake dir's ``table_version`` changes. Direct
+    callers of train_bpe_merges (tests, custom corpora) stay
+    uncached."""
     from ..memo import shared_intermediate
 
     return shared_intermediate(

@@ -8,9 +8,14 @@ upload_papers_to_supabase.py:228-372, DEDUPLICATION_EXPLAINED.md).
 
 Two Spark-native forms:
 
-* ``upsert_parquet`` — lake-side merge: the target is a parquet
-  table, the merge is dedup + anti-join + union + atomic swap. All
-  three reference dedup levels collapse into two distributed ops.
+* ``upsert_parquet`` — lake-side insert-if-absent: dedup + anti-join
+  on the key, then only the inserted rows are written. All three
+  reference dedup levels collapse into two distributed ops, and, like
+  ``ON CONFLICT DO NOTHING``, an existing row is never touched: into a
+  table directory the new rows are APPENDED as new part files behind a
+  commit marker (see ``upsert_parquet`` for the protocol); a
+  single-file or absent table is written whole and swapped in once,
+  after which it is a directory and later batches append.
 * ``foreach_partition_upsert`` — push-side merge for an external
   store (JDBC/Postgres): each partition opens one connection, sends
   ``executemany`` batches; the writer is injected so tests (and this
@@ -24,9 +29,11 @@ The streaming variant (foreachBatch MERGE) lives in
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from typing import Any, Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -52,18 +59,40 @@ def upsert_parquet(
     key: str,
     order_cols: tuple[str, ...] = (),
 ) -> int:
-    """Insert-if-absent merge into a parquet table, atomically.
+    """Insert-if-absent merge into a parquet table
+    (``INSERT ... ON CONFLICT (key) DO NOTHING``). Returns the number
+    of rows actually inserted.
 
     new-dedup (keep-first) -> anti-join vs existing keys (only the KEY
     column of the target is scanned for the join — column pruning) ->
-    union -> write to a staging dir -> atomic rename swap. Returns the
-    number of rows actually inserted.
+    write ONLY the rows to insert. The count comes from an
+    ``Observation`` on that write, not from a separate job.
+
+    * Target is a directory: the rows are conformed to the target's
+      columns (its order, cast to its types; a batch whose column set
+      differs raises ``ValueError``, so appended files never give the
+      table a second schema) and APPENDED. They are written to a
+      hidden ``<target>/_staging-<uuid>/`` (Spark, pyarrow and a
+      ``*.parquet`` glob all skip it). With 0 rows observed the
+      staging directory is deleted and nothing in the target changes.
+      Otherwise a ``_COMMIT`` marker is written into it [COMMIT
+      POINT], its part files are renamed into the target, and it is
+      removed. Existing files are never rewritten or touched.
+    * Target is a single file (the lake's layout), a partitioned
+      directory, or absent: the whole table is written and swapped in
+      (``_swap_in``); it comes back as a flat directory, so later
+      batches append.
+
+    ``_recover_swap`` runs first and finishes or undoes a cut commit.
+    It assumes ONE writer per table: a concurrent upsert's staging
+    directory would be taken for a crashed one. Each non-empty batch
+    adds about one part file (AQE coalesces the small insert set to
+    few partitions); many small batches want a periodic compaction,
+    the ``compact_zone`` rewrite.
 
     Scale shape: the anti-join shuffles on the key (or broadcasts when
-    the new side is small — AQE picks); the rewrite cost is the real
-    limit of parquet-as-target and is why a production target would be
-    a table format with row-level merge (Delta/Iceberg) — same logical
-    plan, cheaper physical swap.
+    the new side is small — AQE picks); the write is proportional to
+    the batch, not the table.
     """
     _recover_swap(target_path)
     fresh = (
@@ -71,16 +100,68 @@ def upsert_parquet(
         if order_cols
         else new_rows.dropDuplicates([key])
     )
-    if os.path.exists(target_path):
+    # a flat table directory is appended to; a partitioned one (its
+    # ``col=value`` subdirectories) is rewritten flat, as a file is
+    append = os.path.isdir(target_path) and not any(
+        "=" in name for name in os.listdir(target_path)
+    )
+    if not os.path.exists(target_path):
+        existing = None
+        to_insert = fresh
+    else:
         existing = spark.read.parquet(target_path)
         to_insert = fresh.join(existing.select(key), key, "left_anti")
-        merged = existing.unionByName(to_insert)
-    else:
-        to_insert = fresh
-        merged = fresh
-    inserted = to_insert.count()
+        if append:
+            to_insert = _conform(to_insert, existing.schema)
+    obs = Observation(f"upsert_parquet:{target_path}")
+    to_insert = to_insert.observe(obs, F.count(F.lit(1)).alias("n"))
+    if append:
+        return _append_committed(to_insert, obs, target_path)
+    merged = to_insert if existing is None else existing.unionByName(to_insert)
     _swap_in(merged, target_path)
-    return inserted
+    return obs.get["n"]
+
+
+def _conform(df: DataFrame, schema) -> DataFrame:
+    """``df`` as rows of a table with ``schema``: its columns in the
+    table's order, cast to the table's types. A differing column set
+    raises, as ``unionByName`` would."""
+    if set(df.columns) != set(schema.fieldNames()):
+        raise ValueError(
+            f"batch columns {sorted(df.columns)} differ from the "
+            f"table's {sorted(schema.fieldNames())}"
+        )
+    return df.select([F.col(f.name).cast(f.dataType) for f in schema])
+
+
+def _append_committed(df: DataFrame, obs, target_path: str) -> int:
+    """Append ``df`` (observed by ``obs`` as ``n``) to the table
+    directory ``target_path`` behind a ``_COMMIT`` marker; see
+    ``upsert_parquet`` for the protocol. A failed write leaves the
+    table as it was."""
+    staging = os.path.join(target_path, f"_staging-{uuid.uuid4().hex}")
+    try:
+        df.write.parquet(staging)
+    except Exception:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    n = obs.get["n"]
+    if n:
+        open(os.path.join(staging, "_COMMIT"), "w").close()
+        _move_parts(staging, target_path)
+    shutil.rmtree(staging)
+    return n
+
+
+def _move_parts(staging: str, target_path: str) -> None:
+    """Rename the part files (and their ``.crc`` sidecars) of a
+    committed staging directory into the table; Spark's ``_SUCCESS``
+    and the marker stay behind."""
+    for name in os.listdir(staging):
+        if not name.startswith(("_", "._")):
+            os.rename(
+                os.path.join(staging, name), os.path.join(target_path, name)
+            )
 
 
 # A writer factory returns a callable that persists one batch of rows;
@@ -283,8 +364,6 @@ def jdbc_upsert(
 def _remove_table(path: str) -> None:
     """Delete a parquet table: a Spark-written directory or a single
     parquet file (the layout of a table written by other tools)."""
-    import shutil
-
     if os.path.isdir(path):
         shutil.rmtree(path)
     else:
@@ -308,12 +387,18 @@ def _swap_in(merged: DataFrame, target_path: str) -> None:
 
 
 def _recover_swap(target_path: str) -> None:
-    """Roll a swap (``_swap_in``) cut between its steps to a
-    consistent state. A crash between (1) and (2) leaves only
+    """Roll a write cut between its steps to a consistent state.
+
+    A swap (``_swap_in``) cut between (1) and (2) leaves only
     target.old -> roll BACK (the merge never committed; restore the
-    original). A crash between (2) and (3) leaves both -> roll
+    original). One cut between (2) and (3) leaves both -> roll
     FORWARD (drop the old copy). Stale staging dirs are removed
-    either way."""
+    either way.
+
+    An append (``_append_committed``) cut before its ``_COMMIT``
+    marker leaves a ``_staging-*`` directory without it -> deleted,
+    the old version stands. One cut after the marker -> roll FORWARD:
+    the part files still in it are moved into the table."""
     old = f"{target_path}.old"
     staging = f"{target_path}.staging"
     if os.path.exists(old):
@@ -323,6 +408,13 @@ def _recover_swap(target_path: str) -> None:
             os.rename(old, target_path)  # crashed before commit point
     if os.path.exists(staging):
         _remove_table(staging)
+    if os.path.isdir(target_path):
+        for name in os.listdir(target_path):
+            if name.startswith("_staging-"):
+                append = os.path.join(target_path, name)
+                if os.path.exists(os.path.join(append, "_COMMIT")):
+                    _move_parts(append, target_path)
+                shutil.rmtree(append)
 
 
 def merge_parquet(

@@ -201,7 +201,9 @@ def test_cohort_day_zero_covers_every_user(spark):
 def test_ivf_index_search_prunes_partitions(spark, tmp_path):
     """Persistent IVF index: searching probes only nprobe list
     partitions — visible as PartitionFilters on the scan — and agrees
-    with the inline-index query's notion of neighbors."""
+    with the inline-index query's notion of neighbors. The opening
+    probe of a fresh index reads the centroids and the vectors'
+    schema without Spark jobs, so it runs at most two."""
     import numpy as np
 
     from citeconnect_datapipeline_spark.operators.similarity import (
@@ -216,12 +218,18 @@ def test_ivf_index_search_prunes_partitions(spark, tmp_path):
     build_ivf_index(emb, idx)
 
     q = emb.filter(F.col("vec_id") == 0).first().embedding
-    out = search_ivf_index(spark, idx, q, k=10)
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-open-probe", "opening probe")
+    try:
+        out = search_ivf_index(spark, idx, q, k=10)
+        rows = out.collect()
+    finally:
+        sc.setJobGroup("ivf-open-probe-done", "idle")
+    assert len(sc.statusTracker().getJobIdsForGroup("ivf-open-probe")) <= 2
     plan = physical(out)
     assert "PartitionFilters" in plan, plan
     pruning_clause = plan.split("PartitionFilters")[1].split("]")[0]
     assert "list_id" in pruning_clause, plan
-    rows = out.collect()
     assert len(rows) == 10
     # the query vector itself lives in a probed list -> similarity 1.0
     assert rows[0].vec_id == 0 and abs(rows[0].similarity - 1.0) < 1e-6

@@ -257,6 +257,196 @@ def test_recover_swap_on_single_file_table(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == n + 1
 
 
+def _files(table: str) -> dict:
+    """name -> (size, mtime_ns) of the files directly in ``table``."""
+    out = {}
+    for name in os.listdir(table):
+        path = os.path.join(table, name)
+        if os.path.isfile(path):
+            st = os.stat(path)
+            out[name] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def _table_dir(spark, tmp_path, name="papers_dir"):
+    """A directory table of three papers, written by a first upsert."""
+    target = str(tmp_path / name)
+    rows = [("a", "ml", 1), ("b", "bio", 2), ("c", "cs", 3)]
+    assert upsert_parquet(spark, papers(spark, rows), target, "paper_id") == 3
+    return target
+
+
+def test_upsert_parquet_appends_without_touching_existing_files(
+    spark, tmp_path
+):
+    """Insert-if-absent into a directory never rewrites a file: every
+    file there before keeps its name, size and mtime, and the new
+    parquet files hold exactly the inserted rows."""
+    import pyarrow.parquet as pq
+
+    target = _table_dir(spark, tmp_path)
+    before = _files(target)
+    batch = papers(spark, [("a", "ml", 99), ("d", "ml", 4), ("e", "bio", 5)])
+    assert upsert_parquet(spark, batch, target, "paper_id") == 2
+
+    after = _files(target)
+    assert {n: after[n] for n in before} == before
+    new = [n for n in after if n not in before and n.endswith(".parquet")]
+    assert new and not any(n.startswith(".") for n in new)
+    added = [
+        tuple(r.values())
+        for n in new
+        for r in pq.read_table(os.path.join(target, n)).to_pylist()
+    ]
+    assert sorted(added) == [("d", "ml", 4), ("e", "bio", 5)]
+    assert not [n for n in os.listdir(target) if n.startswith("_staging-")]
+
+
+def test_upsert_parquet_noop_rerun_keeps_table_version(spark, tmp_path):
+    """A batch whose keys all exist adds no file, not even an empty
+    one: the table's version stamp is unchanged."""
+    from citeconnect_datapipeline_spark.sources.tables import table_version
+
+    target = _table_dir(spark, tmp_path)
+    version = table_version(target)
+    batch = papers(spark, [("a", "ml", 7), ("c", "cs", 8)])
+    assert upsert_parquet(spark, batch, target, "paper_id") == 0
+    assert upsert_parquet(spark, batch.limit(0), target, "paper_id") == 0
+    assert table_version(target) == version
+
+
+def test_upsert_parquet_failed_write_leaves_table_unchanged(spark, tmp_path):
+    """A row that raises inside the write task fails the call and
+    leaves the table as it was; the next upsert succeeds and leaves no
+    staging directory behind."""
+    from citeconnect_datapipeline_spark.sources.tables import table_version
+
+    target = _table_dir(spark, tmp_path)
+    version = table_version(target)
+    batch = papers(spark, [("d", "ml", 4), ("poison", "ml", 5)])
+    poisoned = batch.withColumn(
+        "score",
+        F.when(
+            F.col("paper_id") == "poison", F.raise_error(F.lit("poison row"))
+        ).otherwise(F.col("score")),
+    )
+    with pytest.raises(Exception, match="poison row"):
+        upsert_parquet(spark, poisoned, target, "paper_id")
+    assert table_version(target) == version
+
+    assert upsert_parquet(spark, batch, target, "paper_id") == 2
+    assert not [n for n in os.listdir(target) if n.startswith("_staging-")]
+    assert spark.read.parquet(target).count() == 5
+
+
+def test_upsert_parquet_recovers_cut_appends(spark, tmp_path):
+    """An append cut after its _COMMIT marker, with one part file
+    already moved in, is rolled FORWARD by the next upsert (no key
+    twice, the committed rows kept); one cut before the marker is
+    deleted (its rows never appear)."""
+    target = _table_dir(spark, tmp_path)
+    committed = os.path.join(target, "_staging-cut-after-marker")
+    papers(
+        spark, [("d", "ml", 4), ("e", "bio", 5), ("f", "cs", 6)]
+    ).repartition(3).write.parquet(committed)
+    open(os.path.join(committed, "_COMMIT"), "w").close()
+    moved = sorted(
+        n for n in os.listdir(committed) if n.endswith(".parquet")
+    )[0]
+    os.rename(os.path.join(committed, moved), os.path.join(target, moved))
+    uncommitted = os.path.join(target, "_staging-cut-before-marker")
+    papers(spark, [("x", "ml", 9)]).write.parquet(uncommitted)
+
+    batch = papers(spark, [("d", "ml", 40), ("f", "cs", 60), ("g", "ml", 7)])
+    assert upsert_parquet(spark, batch, target, "paper_id") == 1
+    assert not [n for n in os.listdir(target) if n.startswith("_staging-")]
+    rows = spark.read.parquet(target).select("paper_id", "score").collect()
+    assert sorted(map(tuple, rows)) == [
+        ("a", 1), ("b", 2), ("c", 3), ("d", 4), ("e", 5), ("f", 6), ("g", 7)
+    ]
+
+
+def test_upsert_parquet_appends_in_the_table_schema(spark, tmp_path):
+    """Appended files carry the target's columns, order and types
+    (a batch's wider ``score`` is cast back to int32); a batch with an
+    extra or a missing column raises and writes nothing."""
+    import pyarrow.parquet as pq
+
+    from citeconnect_datapipeline_spark.sources.tables import table_version
+
+    target = _table_dir(spark, tmp_path)
+    before = _files(target)
+    first = next(n for n in before if n.endswith(".parquet"))
+    schema = pq.read_schema(os.path.join(target, first))
+    batch = spark.createDataFrame(
+        [(4, "d", "ml")], "score bigint, paper_id string, domain string"
+    )
+    assert upsert_parquet(spark, batch, target, "paper_id") == 1
+    after = _files(target)
+    new = [n for n in after if n not in before and n.endswith(".parquet")]
+    assert new
+    for name in new:
+        got = pq.read_schema(os.path.join(target, name))
+        assert got.names == schema.names
+        assert got.types == schema.types
+
+    version = table_version(target)
+    extra = papers(spark, [("e", "ml", 5)]).withColumn("venue", F.lit("x"))
+    with pytest.raises(ValueError, match="columns"):
+        upsert_parquet(spark, extra, target, "paper_id")
+    missing = extra.drop("venue", "domain")
+    with pytest.raises(ValueError, match="columns"):
+        upsert_parquet(spark, missing, target, "paper_id")
+    assert table_version(target) == version
+
+
+def test_memo_follows_an_upsert_into_the_lake(spark, sf_dir, tmp_path):
+    """A memo-backed query after an upsert answers for the updated lake
+    with no ``invalidate()``: copies of three docs under new ids join
+    near-dup components, and Spark equals the DuckDB oracle over the
+    lake as it now is."""
+    import shutil
+
+    import duckdb
+
+    from citeconnect_datapipeline_spark.operators.dedup import (
+        neardup_components,
+    )
+    from citeconnect_datapipeline_spark.plans.registry import get_oracles
+
+    lake = tmp_path / "lake"
+    table = lake / "documents.parquet"
+    os.makedirs(table)
+    shutil.copyfile(
+        os.path.join(sf_dir, "documents.parquet"), table / "part-0.parquet"
+    )
+    oracle = get_oracles()["neardup_components"]
+
+    def answers():
+        spark_rows = neardup_components(spark, str(lake)).collect()
+        con = duckdb.connect()
+        try:
+            con.execute(
+                "CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{table}/*.parquet')"
+            )
+            oracle_rows = set(con.execute(oracle).fetchall())
+        finally:
+            con.close()
+        return set(map(tuple, spark_rows)), oracle_rows
+
+    spark_before, oracle_before = answers()
+    assert spark_before == oracle_before
+    docs = spark.read.parquet(str(table))
+    copies = docs.orderBy("doc_id").limit(3).withColumn(
+        "doc_id", F.col("doc_id") + 10**6
+    )
+    assert upsert_parquet(spark, copies, str(table), "doc_id") == 3
+    spark_after, oracle_after = answers()
+    assert oracle_after != oracle_before
+    assert spark_after == oracle_after
+
+
 def test_foreach_partition_upsert_batches(spark, tmp_path):
     """Writer double records every batch to per-task files; asserts
     batch sizing and completeness without a real database."""
