@@ -111,10 +111,10 @@ _DRIVER_VERIFIED = frozenset(
         "token_budget_allocation", "token_entropy",
         "tumbling_window_agg", "variant_json_stats",
         "vocab_coverage", "zipf_alpha_fit",
-        "classifier_eval", "quality_classifier",
-        # (kmeans_clusters' r4 row was rows-only; it has had an oracle
-        # since the k-means fits were unified, so its first hash row
-        # is still to come)
+        # (the r4 rows of kmeans_clusters, quality_classifier and
+        # classifier_eval were rows-only; each has had an oracle since
+        # its family's fits were unified, so its first hash row is
+        # still to come)
         # r5 rows (CORRECTNESS_r05.json: 35 hash-MATCH + 13
         # contractual rows-only, all with sane row counts; the two
         # r5 err rows — embed_documents, embedding_pca_whiten — are
@@ -267,7 +267,9 @@ _REVERIFY_FIRST = (
     # sf0.001/0.01/0.1 with tools/oracle_audit.py):
     "assoc_rules_topk", "copurchase_pmi_topk",
     "part_copurchase_pagerank", "lpa_communities_topk",
-    "community_modularity", "quality_classifier", "classifier_eval",
+    "community_modularity",
+    "quality_classifier",       # new oracle: the one 10-round fit
+    "classifier_eval",          # its confusion table, same CTE chain
     "kmeans_clusters",          # new oracle: unrolled 6-round Lloyd
     "kmeans_portable",          # the shared fit + assignment pass
     "silhouette_portable",      # b = the assignment's runner-up d2
@@ -297,8 +299,8 @@ _REVERIFY_FIRST = (
     # r13 wave 1 (each re-audited locally at sf0.001, sf0.01 AND
     # sf0.1 this round — tools/oracle_audit.py MATCH; the driver row
     # makes the rewrite externally visible):
-    "logreg_adagrad_portable",  # r13: kernel-built feature table +
-    # one mapInArrow partial pass per AdaGrad round
+    "logreg_adagrad_portable",  # the one logistic-regression fit:
+    # feature kernel + one mapInArrow partial pass per AdaGrad round
     "ab_lift_bootstrap",        # r13: replicate weights/partials in
     # one mapInArrow pass over md5 digest bytes
     "simhash_portable",         # r13: md5-SimHash Arrow kernel
@@ -341,7 +343,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     Freshness cadence (r10 verdict #4 — current numbers): the driver
     window is ~50 slots/round. As of r12 the registry is FROZEN at
-    330 queries (309 oracled + 21 contractual rows-only), all 330
+    330 queries (now 311 oracled + 19 contractual rows-only), all 330
     driver-verified at least once (r1-r11 union). r13 spends the
     window on closing the rewrite-verification gap (r12 verdict
     item 2): 31 r12-family entries whose green rows predate their

@@ -13,7 +13,9 @@ user already has, no lake layout required:
         pairs.filter("jaccard >= 0.8"), src="doc_a", dst="doc_b")
     merges = api.tokenizer.train_bpe_merges(my_docs)
     toks   = api.tokenizer.encode_word_vocab(my_docs, merges)
-    w, _   = api.classifier.logreg_fit(feats, labels_df)
+    train  = api.classifier.doc_features(my_docs, my_docs.source == "wiki").persist()
+    fit    = api.classifier.logreg_fit(train, rounds=10)
+    probs  = api.classifier.score_with_weights(train, fit.weights[-1])
 
 Every function here is re-exported verbatim from its operator module
 (one definition, one docstring, one test surface); this module only
@@ -33,6 +35,7 @@ from .operators.asof import asof_join, asof_join_forward
 from .operators.joins import interval_overlap_join
 from .operators.classifier import (
     calibration_cells,
+    doc_features,
     logreg_fit,
     score_with_weights,
 )
@@ -142,6 +145,7 @@ graph = SimpleNamespace(
     lpa_communities=lpa_communities,
 )
 classifier = SimpleNamespace(
+    doc_features=doc_features,
     logreg_fit=logreg_fit,
     score_with_weights=score_with_weights,
     calibration_cells=calibration_cells,

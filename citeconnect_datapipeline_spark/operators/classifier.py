@@ -8,404 +8,454 @@ with fastText-style linear models over bag-of-words features. The
 reference has no learned filter at all (its quality score is rule
 arithmetic, databias/bias_detection_engine.py:1-120) — this module is
 that learned upgrade, trained entirely IN-PLANE with the same
-driver-bounded loop discipline as ``clustering._kmeans_fit``:
+driver-bounded loop discipline as ``clustering._kmeans_fit``. Each
+part has one implementation, shared by all three queries:
 
-- Features: per-document L1-normalized counts over 256 md5-prefix
-  word buckets (the same hashed bag-of-words DSIR uses) + a bias
-  term. Long (doc_id, bucket, x) format, computed ONCE and cached —
-  at 100 TB this is the only corpus-wide pass, one shuffle keyed per
-  document.
+- Features: ``doc_features`` builds ONE row per document,
+  ``(doc_id, y, bs array<int>, xs array<double>)``. The words are
+  split JVM-side; one mapInArrow kernel md5-buckets them (256
+  buckets, the first two hex chars, the hashed bag-of-words DSIR
+  uses), L1-normalises the counts and appends the bias element (slot
+  ``N_BUCKETS``, x = 1). A document with no word (NULL or empty text)
+  gets no row: it neither trains nor scores.
 - Labels: the trusted slice (``source = 'src0'``, the corpus's
   Wikipedia stand-in, as in lm_perplexity_buckets / DSIR) is the
-  positive class; everything else negative. The positive class is
-  re-weighted by the class ratio so the 1:19 imbalance cannot push
-  the classifier to the constant-negative solution.
-- Training: full-batch gradient descent with AdaGrad per-coordinate
-  steps (plain GD on L1-normalized bag-of-words either crawls or
-  oscillates without a hand-tuned global step; the accumulated-
-  curvature denominator is scale-free and still fully
-  deterministic). The current weight vector is embedded in the plan
-  as a 257-double literal array (a few KB — no broadcast variable,
-  no driver-side feature materialization); each round computes the
-  per-doc margin IN-ROW as an array fold over the cached sparse
-  feature array, then explodes it once into a 257-key gradient
-  aggregate — ``collect`` moves 257 doubles per round, NEVER
-  vectors or rows, the exact contract the k-means update uses
-  (k*d partials). No join and no doc-keyed exchange per round.
-- Scale: iteration cost is one scan of the one-row-per-doc cache;
-  model state is 257 doubles regardless of corpus size. The
-  documented production swap is mini-batch rounds over a
-  hash-sampled sliver (``pmod(xxhash64(doc_id), s) = 0``) when
-  full-batch scans per round are too dear.
+  positive class; everything else negative. Positives are re-weighted
+  by the class ratio (negatives / positives; 1.0 when either class
+  is empty) so the 1:19 imbalance cannot push the classifier to the
+  constant-negative solution.
+- Gradient: ``_partials`` is ONE mapInArrow pass over the pinned
+  table whose tasks emit O(model) partials: per class, 257 gradient
+  sums, the loss sum and the document count, plus slot presence.
+  Margins, sigmoids and per-element products run vectorised in numpy
+  inside the task; no join, no doc-keyed exchange, and the driver
+  never sees a document.
+- Fit: ``logreg_fit`` is the one driver-side AdaGrad loop
+  (full-batch, per-coordinate steps: plain GD on L1-normalised
+  bag-of-words either crawls or oscillates without a hand-tuned
+  global step, while the accumulated-curvature denominator is
+  scale-free; L2 on every slot but the bias).
+- Scoring: ``score_with_weights`` is one more mapInArrow pass with
+  the margin and sigmoid the gradient pass uses.
 
-Iterative / loop-carried => non-SQL-expressible: rows-only driver
-check + dedicated tests (separable-synthetic accuracy, numpy
-gradient parity, loss monotonicity, determinism) in
-tests/test_classifier.py.
+Every float that crosses between engines is rounded to 6 dp: the
+class weight, each round's gradient, weights and loss, and each
+document's sigmoid. The margin under the sigmoid is not: it is a sum
+of (count / length) x (6-dp weight) terms, so its exact value often
+sits on a 6-dp tie that each engine's summation order would break
+its own way. ``_lr_oracle`` replays the fit round for round as
+unrolled DuckDB CTEs, so all three queries are hash-checked:
+``quality_classifier`` (10 rounds, one probability per document),
+``classifier_eval`` (its confusion table) and
+``logreg_adagrad_portable`` (2 rounds, the top-20 weight table).
+
+Scale: a round costs one scan of the one-row-per-document table;
+model state is 257 doubles at any corpus size. When full-batch scans
+per round are too dear, the production swap is mini-batch rounds
+over a hash-sampled sliver (``pmod(xxhash64(doc_id), s) = 0``).
 """
 
 from __future__ import annotations
 
-import math
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.rounding import spark_round as _round6
+from ..functions.rounding import round6, spark_round
 from ..plans.registry import query
 from ..sources.tables import literal_frame, load_table
 
-N_BUCKETS = 256  # md5(word) first 2 hex chars, as in DSIR
-N_ITERS = 10
+N_BUCKETS = 256  # md5(word) first 2 hex chars, as in DSIR; bias = slot 256
+N_ROUNDS = 10  # quality_classifier's AdaGrad rounds
+LRP_ROUNDS = 2  # logreg_adagrad_portable's
 LEARNING_RATE = 0.2
 L2_LAMBDA = 1e-4
+ADAGRAD_EPS = 1e-12  # AdaGrad step denominator guard
 TRUSTED_SOURCE = "src0"
+LRP_BIAS = "~bias"  # the bias slot's bucket name; sorts after every
+# hex bucket in both engines
+_BIAS = np.arange(N_BUCKETS + 1) == N_BUCKETS
 
 
-def _bucket_features(docs: DataFrame) -> DataFrame:
-    """(doc_id, b, x): L1-normalized hashed bag-of-words features.
-
-    Zero-token documents produce no rows and are excluded from
-    training/scoring, consistent with every text operator's
-    nonempty gate."""
-    from ..sources.tables import spread_small_source
-
-    docs = spread_small_source(docs)
-    w = F.filter(
+def _words() -> Column:
+    """The lower-cased ``[a-z0-9]+`` words of ``text`` (NULL for NULL
+    text)."""
+    return F.filter(
         F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
         lambda x: x != F.lit(""),
     )
-    counts = (
-        docs.select("doc_id", F.explode(w).alias("word"))
-        .select(
-            "doc_id",
-            F.conv(F.substring(F.md5("word"), 1, 2), 16, 10)
-            .cast("int")
-            .alias("b"),
-        )
-        .groupBy("doc_id", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    n = F.sum("c").over(Window.partitionBy("doc_id"))
-    return counts.select(
-        "doc_id", "b", (F.col("c").cast("double") / n).alias("x")
-    )
 
 
-def _margin_expr(weights: list[float]):
-    """sum(x * w[b]) via a literal weight array (bias included as
-    slot N_BUCKETS, paired with the synthetic x=1 bias feature row) —
-    the model rides the plan, so scoring is pure codegen with no join
-    against a weight table."""
-    lit_w = F.array(*[F.lit(float(v)) for v in weights])
-    return F.sum(F.col("x") * F.element_at(lit_w, F.col("b") + 1))
+def doc_features(docs: DataFrame, label: Column) -> DataFrame:
+    """The per-document training table ``(doc_id, y, bs, xs)`` over a
+    ``(doc_id, text)`` frame: y is 1.0 where the boolean ``label``
+    holds and 0.0 elsewhere; bs and xs are the document's md5-bucket
+    ids in ascending order and their L1-normalised word counts, then
+    the bias element (slot N_BUCKETS, x = 1). A document with no word
+    has no row."""
+    import hashlib
+    from collections import Counter
 
-
-def logreg_fit(
-    feats: DataFrame,
-    labels: DataFrame,
-    iters: int = N_ITERS,
-    lr: float = LEARNING_RATE,
-    l2: float = L2_LAMBDA,
-    keep_train: bool = False,
-):
-    """Full-batch weighted logistic regression.
-
-    ``feats``: (doc_id, b, x) long features; ``labels``: (doc_id, y)
-    with y in {0.0, 1.0}. Returns (weights[257] with bias last,
-    per-iteration mean weighted log-loss) — the loss history is what
-    the monotonicity test pins. With ``keep_train=True`` the cached
-    per-doc training table (doc_id, y, fx) is NOT unpersisted and is
-    returned as a third element, so a caller can SCORE off the same
-    cache instead of re-deriving features with a second corpus scan
-    (quality_classifier does, via its materialized-intermediate
-    entry — the caller owns the cache's lifetime).
-    """
-    pos, tot = labels.agg(
-        F.sum("y").alias("p"), F.count("*").alias("t")
-    ).first()
-    pos = float(pos or 0.0)
-    pw = (tot - pos) / pos if 0.0 < pos < tot else 1.0
-    # ONE cached row per document: (doc_id, y, fx) where fx is the
-    # sparse feature array [(b, x)...] with a synthetic bias element
-    # (b = N_BUCKETS, x = 1) appended — zero-token docs (empty fx
-    # after the left join) still train the bias. Everything
-    # per-iteration computes IN-ROW off this cache: the margin is an
-    # array fold against the literal weight vector, so each round is
-    # a single scan + explode + 257-key aggregate + 257-row collect.
-    # No join, no doc-keyed exchange, no sort — the earlier
-    # long-format variant paid a sort-merge join per round and ran
-    # ~4x slower at sf0.1.
-    bias_elem = F.array(
-        F.struct(
-            F.lit(N_BUCKETS).alias("b"), F.lit(1.0).alias("x")
-        )
-    )
-    per_doc = feats.groupBy("doc_id").agg(
-        F.collect_list(
-            F.struct(F.col("b").alias("b"), F.col("x").alias("x"))
-        ).alias("fx0")
-    )
-    train = (
-        labels.join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            "y",
-            F.concat(
-                F.coalesce(
-                    "fx0", F.array().cast("array<struct<b:int,x:double>>")
-                ),
-                bias_elem,
-            ).alias("fx"),
-        )
-        .persist()
-    )
-    try:
-        weights, losses = _adagrad_rounds(
-            train, pos, tot, pw, iters, lr, l2
-        )
-    finally:
-        if not keep_train:
-            train.unpersist()
-    if keep_train:
-        return weights, losses, train
-    return weights, losses
-
-
-def _adagrad_rounds(
-    train: DataFrame,
-    pos: float,
-    tot: int,
-    pw: float,
-    iters: int,
-    lr: float,
-    l2: float,
-) -> tuple[list[float], list[float]]:
-    """The AdaGrad loop over a cached (y, fx) training table.
-
-    r13 (guide §4.2): one mapInArrow pass per round, emitting
-    O(model) per-task partials — margin, sigmoid and per-element
-    gradient products run vectorized in numpy inside the task. The
-    r12 round was an INTERPRETED Catalyst fold over fx (no codegen
-    for lambda bodies) plus an explode into a 257-key aggregate:
-    ~4x the per-round CPU and 2 extra AQE stages. Values differ only
-    in float summation order (covered by the numpy-parity test at
-    rtol 1e-9)."""
-    import numpy as np
     import pyarrow as pa
 
-    weights = [0.0] * (N_BUCKETS + 1)
-    g2 = [0.0] * (N_BUCKETS + 1)  # AdaGrad accumulators
-    losses: list[float] = []
-    denom = pos * pw + (tot - pos)  # total sample weight
-    feat_cols = train.select("y", "fx")
+    from ..sources.tables import spread_small_source
 
-    def _grad_pass(w_list: list[float]) -> tuple[list[float], float]:
-        wv = np.asarray(w_list, dtype=np.float64)
+    src = spread_small_source(docs).select(
+        "doc_id",
+        F.when(label, 1.0).otherwise(0.0).alias("y"),
+        _words().alias("ws"),
+    )
 
-        def fn(batches):
-            g = np.zeros(N_BUCKETS + 1)
-            ls = 0.0
-            for b in batches:
-                ys = b.column("y").to_numpy(zero_copy_only=False)
-                if len(ys) == 0:
+    def kernel(batches):
+        for b in batches:
+            keep, bs, xs = [], [], []
+            for i, ws in enumerate(b.column("ws").to_pylist()):
+                if not ws:
                     continue
-                fx = b.column("fx")
-                off = np.asarray(fx.offsets, dtype=np.int64)
-                starts = off[:-1] - off[0]
-                lens = off[1:] - off[:-1]
-                sv = fx.flatten()
-                fb = np.asarray(sv.field("b"), dtype=np.int64)
-                xx = np.asarray(sv.field("x"), dtype=np.float64)
-                # every doc carries the synthetic bias element, so no
-                # segment is empty and reduceat is well-defined
-                m = np.add.reduceat(xx * wv[fb], starts)
-                sw = np.where(ys == 1.0, pw, 1.0)
-                sig = 1.0 / (1.0 + np.exp(-m))
-                r = sw * (sig - ys)
-                # overflow-safe weighted log-loss, as before
-                ls += float(
-                    np.sum(
-                        sw
-                        * (
-                            np.log1p(np.exp(-np.abs(m)))
-                            + np.maximum((1.0 - 2.0 * ys) * m, 0.0)
-                        )
-                    )
+                counts = Counter(
+                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:2], 16)
+                    for w in ws
                 )
-                g += np.bincount(
-                    fb,
-                    weights=np.repeat(r, lens) * xx,
-                    minlength=N_BUCKETS + 1,
+                slots = sorted(counts)
+                keep.append(i)
+                bs.append(slots + [N_BUCKETS])
+                xs.append([counts[s] / len(ws) for s in slots] + [1.0])
+            if keep:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column("doc_id").take(keep),
+                        b.column("y").take(keep),
+                        pa.array(bs, type=pa.list_(pa.int32())),
+                        pa.array(xs, type=pa.list_(pa.float64())),
+                    ],
+                    names=["doc_id", "y", "bs", "xs"],
                 )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([g.tolist()], type=pa.list_(pa.float64())),
-                    pa.array([ls], type=pa.float64()),
-                ],
-                names=["g", "l"],
-            )
 
-        rows = feat_cols.mapInArrow(
-            fn, "g array<double>, l double"
-        ).collect()
-        gsum = np.zeros(N_BUCKETS + 1)
-        lsum = 0.0
-        for row in rows:
-            gsum += np.asarray(row["g"])
-            lsum += float(row["l"])
-        return gsum.tolist(), lsum
-
-    for _ in range(iters):
-        grad, lsum = _grad_pass(weights)
-        losses.append(lsum / denom)
-        # AdaGrad per-coordinate step: plain GD on L1-normalized
-        # bag-of-words needs a hand-tuned global step (diverges
-        # by lr=20 on this corpus, crawls at lr=1); the
-        # accumulated-curvature denominator makes the step
-        # scale-free per bucket and is still fully deterministic.
-        new_w = []
-        for i, (w, g) in enumerate(zip(weights, grad)):
-            # bias (last slot) is conventionally unregularized
-            g_tot = g / denom + (l2 * w if i < N_BUCKETS else 0.0)
-            g2[i] += g_tot * g_tot
-            new_w.append(w - lr * g_tot / (math.sqrt(g2[i]) + 1e-12))
-        weights = new_w
-    return weights, losses
-
-
-def score_with_weights(feats: DataFrame, weights: list[float]) -> DataFrame:
-    """(doc_id, quality_prob): sigmoid of the literal-array margin —
-    a single aggregate, no Python, model folded into codegen."""
-    m = _margin_expr(weights) + F.lit(weights[N_BUCKETS])
-    return feats.groupBy("doc_id").agg(
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 6).alias(
-            "quality_prob"
-        )
+    id_type = src.schema["doc_id"].dataType.simpleString()
+    return src.mapInArrow(
+        kernel, f"doc_id {id_type}, y double, bs array<int>, xs array<double>"
     )
 
 
-@query("quality_classifier")  # rows-only: loop-carried training
+def _doc_arrays(batch):
+    """One Arrow batch of the training table as numpy: labels, flat
+    slot ids, flat x values, and each document's start and length in
+    the flat arrays."""
+    ys = batch.column("y").to_numpy(zero_copy_only=False)
+    bs = batch.column("bs")
+    off = np.asarray(bs.offsets, dtype=np.int64)
+    flat_b = np.asarray(bs.flatten(), dtype=np.int64)
+    flat_x = np.asarray(batch.column("xs").flatten(), dtype=np.float64)
+    return ys, flat_b, flat_x, off[:-1] - off[0], np.diff(off)
+
+
+def _probs(bs, xs, starts, wv):
+    """Each document's 6-dp sigmoid of its margin sum(x * w[b])
+    (every document holds the bias element, so no segment is
+    empty)."""
+    m = np.add.reduceat(xs * wv[bs], starts)
+    return round6(1.0 / (1.0 + np.exp(-m)))
+
+
+def _partials(train: DataFrame, wv: np.ndarray):
+    """One pass over the training table under weights ``wv``, split by
+    class (row 0: y = 0, row 1: y = 1): per slot the gradient sum of
+    (p - y) x, the loss sum of -ln(p if y else 1 - p) and the number
+    of documents, plus the number of documents holding each slot.
+    Each task collects one row of partials."""
+    import pyarrow as pa
+
+    k = N_BUCKETS + 1
+
+    def kernel(batches):
+        g = np.zeros(2 * k)
+        loss = np.zeros(2)
+        n = np.zeros(2, dtype=np.int64)
+        seen = np.zeros(k, dtype=np.int64)
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            ys, bs, xs, starts, lens = _doc_arrays(b)
+            p = _probs(bs, xs, starts, wv)
+            pos = (ys == 1.0).astype(np.int64)
+            loss += np.bincount(
+                pos, weights=-np.log(np.where(pos, p, 1.0 - p)), minlength=2
+            )
+            n += np.bincount(pos, minlength=2)
+            g += np.bincount(
+                np.repeat(pos * k, lens) + bs,
+                weights=np.repeat(p - ys, lens) * xs,
+                minlength=2 * k,
+            )
+            seen += np.bincount(bs, minlength=k)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([g.tolist()], type=pa.list_(pa.float64())),
+                pa.array([loss.tolist()], type=pa.list_(pa.float64())),
+                pa.array([n.tolist()], type=pa.list_(pa.int64())),
+                pa.array([seen.tolist()], type=pa.list_(pa.int64())),
+            ],
+            names=["g", "loss", "n", "seen"],
+        )
+
+    g, loss = np.zeros(2 * k), np.zeros(2)
+    n, seen = np.zeros(2, dtype=np.int64), np.zeros(k, dtype=np.int64)
+    for r in train.mapInArrow(
+        kernel,
+        "g array<double>, loss array<double>, n array<bigint>,"
+        " seen array<bigint>",
+    ).collect():
+        g += np.asarray(r["g"])
+        loss += np.asarray(r["loss"])
+        n += np.asarray(r["n"], dtype=np.int64)
+        seen += np.asarray(r["seen"], dtype=np.int64)
+    return g.reshape(2, k), loss, n, seen
+
+
+class LogRegFit(NamedTuple):
+    """``rounds`` AdaGrad rounds: ``weights[t]`` holds the 257 weights
+    (bias last) after round t, t = 0..rounds (round 0 is the all-zero
+    start); round t + 1's pass measures ``losses[t]``, the mean
+    weighted training loss under ``weights[t]``, and takes the
+    gradient ``grads[t]``; ``seen`` counts the documents holding each
+    slot."""
+
+    weights: list
+    grads: list
+    losses: list
+    seen: np.ndarray
+
+
+def logreg_fit(train: DataFrame, rounds: int) -> LogRegFit:
+    """Full-batch class-weighted logistic regression over a
+    ``doc_features`` table, which the caller pins: each round reads
+    it once, in one mapInArrow pass (the first also counts the
+    classes). Positives weigh pw = negatives / positives (1.0 when a
+    class is empty). A round takes the gradient
+    g = sum(wt (p - y) x) / sum(wt) + L2_LAMBDA * w (no L2 on the
+    bias), accumulates h += g^2 and steps
+    w -= LEARNING_RATE * g / (sqrt(h) + ADAGRAD_EPS). pw, g, w and
+    each loss are rounded to 6 dp and p is the 6-dp sigmoid, so
+    ``_lr_oracle`` replays the fit exactly."""
+    weights, grads, losses = [np.zeros(N_BUCKETS + 1)], [], []
+    h = np.zeros(N_BUCKETS + 1)
+    seen = np.zeros(N_BUCKETS + 1, dtype=np.int64)
+    for t in range(rounds):
+        w = weights[-1]
+        g_cls, loss_cls, (neg, pos), seen = _partials(train, w)
+        if t == 0:
+            pw = spark_round(neg / pos) if pos and neg else 1.0
+            denom = max(pos * pw + neg, 1.0)  # 1.0: only when empty
+        losses.append(spark_round((pw * loss_cls[1] + loss_cls[0]) / denom))
+        g = round6(
+            (pw * g_cls[1] + g_cls[0]) / denom
+            + np.where(_BIAS, 0.0, L2_LAMBDA * w)
+        )
+        h = h + g * g
+        grads.append(g)
+        weights.append(
+            round6(w - LEARNING_RATE * g / (np.sqrt(h) + ADAGRAD_EPS))
+        )
+    return LogRegFit(weights, grads, losses, seen)
+
+
+def score_with_weights(train: DataFrame, weights) -> DataFrame:
+    """``(doc_id, y, quality_prob)`` for every row of a
+    ``doc_features`` table: the 6-dp sigmoid of the margin under
+    ``weights`` (N_BUCKETS + 1 values, bias last; any other length
+    raises ValueError)."""
+    import pyarrow as pa
+
+    if len(weights) != N_BUCKETS + 1:
+        raise ValueError(
+            f"expected {N_BUCKETS + 1} classifier weights (bias last),"
+            f" got {len(weights)}"
+        )
+    wv = np.asarray(weights, dtype=np.float64)
+
+    def kernel(batches):
+        for b in batches:
+            if b.num_rows:
+                _, bs, xs, starts, _ = _doc_arrays(b)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        b.column("doc_id"),
+                        b.column("y"),
+                        pa.array(_probs(bs, xs, starts, wv)),
+                    ],
+                    names=["doc_id", "y", "quality_prob"],
+                )
+
+    id_type = train.schema["doc_id"].dataType.simpleString()
+    return train.mapInArrow(
+        kernel, f"doc_id {id_type}, y double, quality_prob double"
+    )
+
+
+def _lr_oracle(rounds: int, tail: str) -> str:
+    """DuckDB replay of ``doc_features`` + ``logreg_fit(train,
+    rounds)`` on the trusted-source labels: the training table as long
+    (doc_id, b, x) rows with bucket names for slots, then for
+    t = 0..rounds the probabilities p{t} (doc_id, y, wt, p) and the
+    loss loss{t} under the weights w{t} (b, g, h, w), and for
+    t < rounds round t + 1's gradient and weights w{t + 1}. p{t} and
+    w{t} are MATERIALIZED: inlined, every round would re-derive all
+    earlier ones. ``tail`` is the final SELECT over these CTEs."""
+    sql = [f"""
+    WITH lab AS (
+        SELECT doc_id,
+               CASE WHEN source = '{TRUSTED_SOURCE}' THEN 1.0
+                    ELSE 0.0 END AS y
+        FROM documents
+        WHERE len(list_filter(
+            string_split_regex(lower(text), '[^a-z0-9]+'),
+            x -> x <> '')) > 0
+    ),
+    cw AS (
+        SELECT SUM(y) AS pos, COUNT(*) AS tot,
+               CASE WHEN SUM(y) > 0 AND SUM(y) < COUNT(*)
+                    THEN ROUND((COUNT(*) - SUM(y)) / SUM(y), 6)
+                    ELSE 1.0 END AS pw
+        FROM lab
+    ),
+    dn AS (SELECT GREATEST(pos * pw + (tot - pos), 1.0) AS denom FROM cw),
+    labw AS (
+        SELECT l.doc_id, l.y,
+               CASE WHEN l.y = 1.0 THEN c.pw ELSE 1.0 END AS wt
+        FROM lab l CROSS JOIN cw c
+    ),
+    wordfeat AS (
+        SELECT doc_id, substr(md5(word), 1, 2) AS b,
+               COUNT(*) AS c
+        FROM (
+            SELECT doc_id, unnest(list_filter(
+                string_split_regex(lower(text), '[^a-z0-9]+'),
+                x -> x <> '')) AS word
+            FROM documents
+        )
+        GROUP BY 1, 2
+    ),
+    feats AS (
+        SELECT doc_id, b,
+               c * 1.0 / SUM(c) OVER (PARTITION BY doc_id) AS x
+        FROM wordfeat
+        UNION ALL
+        SELECT DISTINCT doc_id, '{LRP_BIAS}' AS b, 1.0 AS x
+        FROM wordfeat
+    ),
+    w0 AS (
+        SELECT DISTINCT b, CAST(0 AS DOUBLE) AS g,
+               CAST(0 AS DOUBLE) AS h, CAST(0 AS DOUBLE) AS w
+        FROM feats
+    )"""]
+    for t in range(rounds + 1):
+        sql.append(f""",
+    p{t} AS MATERIALIZED (
+        SELECT l.doc_id, l.y, l.wt,
+               ROUND(1.0 / (1.0 + exp(-SUM(f.x * w.w))), 6) AS p
+        FROM feats f JOIN w{t} w USING (b) JOIN labw l USING (doc_id)
+        GROUP BY l.doc_id, l.y, l.wt
+    ),
+    loss{t} AS (
+        SELECT ROUND(SUM(wt * -ln(CASE WHEN y = 1.0 THEN p
+                                       ELSE 1.0 - p END))
+                     / (SELECT denom FROM dn), 6) AS loss
+        FROM p{t}
+    )""")
+        if t < rounds:
+            sql.append(f""",
+    g{t + 1} AS (
+        SELECT w.b, w.w, w.h,
+               ROUND(s.s / (SELECT denom FROM dn)
+                     + CASE WHEN w.b = '{LRP_BIAS}' THEN 0.0
+                            ELSE {L2_LAMBDA} * w.w END, 6) AS g
+        FROM w{t} w JOIN (
+            SELECT f.b, SUM(p.wt * (p.p - p.y) * f.x) AS s
+            FROM feats f JOIN p{t} p USING (doc_id)
+            GROUP BY f.b
+        ) s USING (b)
+    ),
+    w{t + 1} AS MATERIALIZED (
+        SELECT b, g, h + g * g AS h,
+               ROUND(w - {LEARNING_RATE} * g
+                     / (sqrt(h + g * g) + {ADAGRAD_EPS}), 6) AS w
+        FROM g{t + 1}
+    )""")
+    return "".join(sql) + "\n    " + tail.strip() + "\n"
+
+
+def _trusted_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return doc_features(
+        load_table(spark, sf_dir, "documents"),
+        F.col("source") == TRUSTED_SOURCE,
+    )
+
+
+_QC_LAST = f"p{N_ROUNDS}"  # probabilities under quality_classifier's fit
+
+
+@query(
+    "quality_classifier",
+    oracle=_lr_oracle(
+        N_ROUNDS,
+        f"""
+    SELECT doc_id, p AS quality_prob,
+           CAST(y AS INTEGER) AS is_trusted_source, p >= 0.5 AS keep
+    FROM {_QC_LAST}
+    ORDER BY doc_id
+    """,
+    ),
+)
 def quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the LR quality filter on trusted-vs-rest labels and
     score every document; ``keep`` marks documents the (class-
     balanced) classifier rates more trusted-like than not
     (prob >= 0.5) — the kept set is the classifier-filtered corpus
-    downstream curation (dedup, mixing, packing) consumes."""
+    downstream curation (dedup, mixing, packing) consumes. The pinned
+    training table and the weights are memoized per lake version, so
+    ``classifier_eval`` reads the same fit and scoring is one pass
+    over that table."""
     from ..memo import shared_intermediate
 
     def build():
-        # r13 (guide §4.2): the training table is built by ONE
-        # mapInArrow kernel over (doc_id, y, words) — tokenize stays
-        # JVM-side; md5-bucketing + L1-normalization happen per doc
-        # inside the task — so the cold fit pays NO shuffle at all
-        # for features (the r12 path was explode -> (doc, b) agg ->
-        # per-doc window -> collect_list -> label join: 3 doc-keyed
-        # exchanges, the bench's slowest cold artifact at 5.4 s).
-        # Same table contract as logreg_fit's builder: one row per
-        # document, bias element appended, zero-token docs bias-only.
-        import hashlib
+        train = _trusted_features(spark, sf_dir).persist()
+        return train, logreg_fit(train, N_ROUNDS).weights[-1]
 
-        import pyarrow as pa
-
-        from ..sources.tables import spread_small_source
-
-        docs = spread_small_source(load_table(spark, sf_dir, "documents"))
-        words = F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-            lambda x: x != F.lit(""),
-        )
-        src = docs.select(
-            "doc_id",
-            F.when(F.col("source") == TRUSTED_SOURCE, 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-            words.alias("ws"),
-        )
-        fx_type = pa.list_(
-            pa.struct([("b", pa.int32()), ("x", pa.float64())])
-        )
-
-        def _train_kernel(batches):
-            for b in batches:
-                ids, ys, fxs = [], [], []
-                for did, y, wlist in zip(
-                    b.column(0).to_pylist(),
-                    b.column(1).to_pylist(),
-                    b.column(2).to_pylist(),
-                ):
-                    counts: dict[int, int] = {}
-                    tw = len(wlist) if wlist else 0
-                    if wlist:
-                        for w in wlist:
-                            i = int(
-                                hashlib.md5(
-                                    w.encode("utf-8")
-                                ).hexdigest()[:2],
-                                16,
-                            )
-                            counts[i] = counts.get(i, 0) + 1
-                    fx = [
-                        {"b": i, "x": counts[i] * 1.0 / tw}
-                        for i in sorted(counts)
-                    ] + [{"b": N_BUCKETS, "x": 1.0}]
-                    ids.append(did)
-                    ys.append(float(y))
-                    fxs.append(fx)
-                if ids:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(ids),
-                            pa.array(ys, type=pa.float64()),
-                            pa.array(fxs, type=fx_type),
-                        ],
-                        names=["doc_id", "y", "fx"],
-                    )
-
-        train = src.mapInArrow(
-            _train_kernel,
-            "doc_id long, y double,"
-            " fx array<struct<b:int,x:double>>",
-        ).persist()
-        pos, tot = train.agg(
-            F.sum("y").alias("p"), F.count("*").alias("t")
-        ).first()
-        pos = float(pos or 0.0)
-        pw = (tot - pos) / pos if 0.0 < pos < tot else 1.0
-        weights, _ = _adagrad_rounds(
-            train, pos, tot, pw, N_ITERS, LEARNING_RATE, L2_LAMBDA
-        )
-        return train, weights
-
-    # ONE corpus scan per process: fit and scoring both read the
-    # cached (doc_id, y, fx) table — scoring is the same in-row fold
-    # the training rounds use, no feature re-derivation, no join.
     train, weights = shared_intermediate(
         spark, "quality_classifier_fit", (sf_dir,), build
     )
-    lit_w = F.array(*[F.lit(float(v)) for v in weights])
-    m = F.aggregate(
-        "fx",
-        F.lit(0.0),
-        lambda acc, f: acc + f["x"] * F.element_at(lit_w, f["b"] + 1),
-    )
-    prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-m)), 6)
-    return (
-        # fx always holds the synthetic bias element; >1 means the
-        # doc had at least one real token (the same nonempty gate the
-        # feature-table scoring applied)
-        train.filter(F.size("fx") > 1)
-        .select(
-            "doc_id",
-            prob.alias("quality_prob"),
-            F.col("y").cast("int").alias("is_trusted_source"),
-            (prob >= 0.5).alias("keep"),
-        )
-        .orderBy("doc_id")
+    prob = F.col("quality_prob")
+    # sorted before scoring: the range sort's sampling job then reads
+    # the cached table instead of running the scoring kernel twice, and
+    # the kernel keeps each partition's order
+    return score_with_weights(train.orderBy("doc_id"), weights).select(
+        "doc_id",
+        prob,
+        F.col("y").cast("int").alias("is_trusted_source"),
+        (prob >= 0.5).alias("keep"),
     )
 
 
-@query("classifier_eval")  # rows-only: consumes the trained model
+@query(
+    "classifier_eval",
+    oracle=_lr_oracle(
+        N_ROUNDS,
+        f"""
+    SELECT is_trusted_source, keep, n,
+           ROUND(n / SUM(n) OVER (PARTITION BY is_trusted_source), 6)
+               AS share_of_label
+    FROM (
+        SELECT CAST(y AS INTEGER) AS is_trusted_source,
+               p >= 0.5 AS keep, COUNT(*) AS n
+        FROM {_QC_LAST}
+        GROUP BY 1, 2
+    )
+    ORDER BY is_trusted_source, keep
+    """,
+    ),
+)
 def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion table for the LR quality filter against its own
     training labels (trusted-source vs rest) — keep-decision counts,
@@ -434,361 +484,55 @@ def classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LRP_EPS = 1e-12  # AdaGrad step denominator guard (same as logreg_fit)
-LRP_BIAS = "~bias"  # sorts after every hex bucket in both engines
-
-
-def _lrp_oracle() -> str:
-    """Unrolled-CTE oracle for logreg_adagrad_portable: 2 AdaGrad
-    rounds of weighted full-batch logistic regression spelled in
-    portable SQL. Every cross-engine float boundary is pinned by a
-    6-dp ROUND: the class weight, each round's gradient, each
-    round's weight, the per-doc margin, and the sigmoid — so fp
-    association order in the big sums cannot flip a downstream
-    comparison (the same contract kmeans_portable uses)."""
-    return f"""
-    WITH lab AS (
-        SELECT doc_id,
-               CASE WHEN source = '{TRUSTED_SOURCE}' THEN 1.0
-                    ELSE 0.0 END AS y
-        FROM documents
-        WHERE len(list_filter(
-            string_split_regex(lower(text), '[^a-z0-9]+'),
-            x -> x <> '')) > 0
-    ),
-    cw AS (
-        SELECT SUM(y) AS pos, COUNT(*) AS tot,
-               ROUND((COUNT(*) - SUM(y)) / SUM(y), 6) AS pw
-        FROM lab
-    ),
-    labw AS (
-        SELECT l.doc_id, l.y,
-               CASE WHEN l.y = 1.0 THEN c.pw ELSE 1.0 END AS wt
-        FROM lab l CROSS JOIN cw c
-    ),
-    wordfeat AS (
-        SELECT doc_id, substr(md5(word), 1, 2) AS b,
-               COUNT(*) AS c
-        FROM (
-            SELECT doc_id, unnest(list_filter(
-                string_split_regex(lower(text), '[^a-z0-9]+'),
-                x -> x <> '')) AS word
-            FROM documents
-        )
-        GROUP BY 1, 2
-    ),
-    feats AS (
-        SELECT doc_id, b,
-               c * 1.0 / SUM(c) OVER (PARTITION BY doc_id) AS x
-        FROM wordfeat
-        UNION ALL
-        SELECT DISTINCT doc_id, '{LRP_BIAS}' AS b, 1.0 AS x
-        FROM wordfeat
-    ),
-    dn AS (SELECT pos * pw + (tot - pos) AS denom FROM cw),
-    g1 AS (
-        SELECT f.b,
-               ROUND(SUM(l.wt * (0.5 - l.y) * f.x)
-                     / (SELECT denom FROM dn), 6) AS g1
-        FROM feats f JOIN labw l USING (doc_id)
-        GROUP BY f.b
-    ),
-    w1 AS (
-        SELECT b, g1,
-               ROUND(-{LEARNING_RATE} * g1
-                     / (sqrt(g1 * g1) + {LRP_EPS}), 6) AS w1
-        FROM g1
-    ),
-    m2 AS (
-        SELECT f.doc_id, ROUND(SUM(f.x * w.w1), 6) AS m
-        FROM feats f JOIN w1 w USING (b)
-        GROUP BY f.doc_id
-    ),
-    p2 AS (
-        SELECT l.doc_id, l.y, l.wt,
-               ROUND(1.0 / (1.0 + exp(-m2.m)), 6) AS p
-        FROM labw l JOIN m2 USING (doc_id)
-    ),
-    loss2 AS (
-        SELECT ROUND(SUM(wt * -(y * ln(p) + (1 - y) * ln(1 - p)))
-                     / (SELECT denom FROM dn), 6) AS loss_r2
-        FROM p2
-    ),
-    g2p AS (
-        SELECT f.b, SUM(p.wt * (p.p - p.y) * f.x) AS s
-        FROM feats f JOIN p2 p USING (doc_id)
-        GROUP BY f.b
-    ),
-    model AS (
-        SELECT w.b, w.g1, w.w1,
-               ROUND(g2p.s / (SELECT denom FROM dn)
-                     + CASE WHEN w.b = '{LRP_BIAS}' THEN 0.0
-                            ELSE {L2_LAMBDA} * w.w1 END, 6) AS g2
-        FROM w1 w JOIN g2p USING (b)
-    ),
-    model2 AS (
-        SELECT b, g1, w1, g2,
-               ROUND(w1 - {LEARNING_RATE} * g2
-                     / (sqrt(g1 * g1 + g2 * g2) + {LRP_EPS}), 6)
-                   AS w2
-        FROM model
-    ),
-    m3 AS (
-        SELECT f.doc_id, ROUND(SUM(f.x * model2.w2), 6) AS m
-        FROM feats f JOIN model2 USING (b)
-        GROUP BY f.doc_id
-    ),
-    p3 AS (
-        SELECT l.doc_id, l.y, l.wt,
-               ROUND(1.0 / (1.0 + exp(-m3.m)), 6) AS p
-        FROM labw l JOIN m3 USING (doc_id)
-    ),
-    loss3 AS (
-        SELECT ROUND(SUM(wt * -(y * ln(p) + (1 - y) * ln(1 - p)))
-                     / (SELECT denom FROM dn), 6) AS loss_final
-        FROM p3
-    )
-    SELECT m.b AS bucket, m.g1, m.w1, m.g2, m.w2,
-           l2.loss_r2, l3.loss_final
-    FROM model2 m CROSS JOIN loss2 l2 CROSS JOIN loss3 l3
-    ORDER BY abs(m.w2) DESC, m.b
+@query(
+    "logreg_adagrad_portable",
+    oracle=_lr_oracle(
+        LRP_ROUNDS,
+        """
+    SELECT a.b AS bucket, a.g AS g1, a.w AS w1, c.g AS g2, c.w AS w2,
+           r.loss AS loss_r2, f.loss AS loss_final
+    FROM w1 a JOIN w2 c USING (b)
+    CROSS JOIN loss1 r CROSS JOIN loss2 f
+    ORDER BY abs(c.w) DESC, a.b
     LIMIT 20
-    """
-
-
-def _lrp_doc_arrays(batch):
-    """Decode one Arrow batch of the pinned per-doc training table
-    (y double, bs array<int>, xs array<double>) into numpy: labels,
-    flat bucket ids, flat x values, and per-doc segment starts."""
-    import numpy as np
-
-    ys = batch.column("y").to_numpy(zero_copy_only=False)
-    bs = batch.column("bs")
-    xs = batch.column("xs")
-    off = np.asarray(bs.offsets, dtype=np.int64)
-    starts = off[:-1] - off[0]
-    flat_b = np.asarray(bs.flatten(), dtype=np.int64)
-    flat_x = np.asarray(xs.flatten(), dtype=np.float64)
-    return ys, flat_b, flat_x, starts, off[1:] - off[:-1]
-
-
-@query("logreg_adagrad_portable", oracle=_lrp_oracle())
+    """,
+    ),
+)
 def logreg_adagrad_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Value-verified logistic-regression twin — the classifier
-    family's first hash-MATCHED member: 2 unrolled AdaGrad rounds of
-    the EXACT update rule `logreg_fit` runs for 10 (g/denom + l2*w,
-    h += g^2, w -= lr*g/(sqrt(h)+eps), bias unregularized, positives
-    re-weighted by the class ratio), replayed CTE-for-CTE by DuckDB
-    so weights, gradients, and the before/after training loss all
-    hash-match value-for-value.
-
-    Differences from the production fit, chosen for portability and
-    documented here: buckets are the md5 2-hex-char STRING keys
-    (DSIR's portable bucketing); 2 rounds instead of 10; zero-token
-    docs are excluded rather than trained bias-only; the loss is the
-    direct -[y ln p + (1-y) ln(1-p)] form (margins here are bounded
-    by lr, so the overflow-safe form is unnecessary). Every float
-    that crosses an engine boundary is rounded at 6 dp before use
-    (class weight, per-round gradient and weight, per-doc margin,
-    sigmoid) — driver-side rounding uses `_round6`, the bit-faithful
-    twin of F.round — so engines re-synchronize at every step
-    exactly as the r12 in-plane form did.
-
-    r13 (guide §4.2/§2.4): the corpus-grain work per round was 2-3
-    doc-keyed JOINS + a 257-key aggregate (23 AQE jobs, 2.4 s
-    isolated, 8.6 s in-suite — a top-5 entry). Now the feature pass
-    builds ONE pinned per-doc table (y, bucket-ids, x-values) via a
-    mapInArrow tokenize+hash kernel (no explode, no per-doc window),
-    and each round is ONE mapInArrow pass over it emitting O(model)
-    per-task partials (257 gradient sums + the loss term + bucket
-    presence) — margins, sigmoids and per-element products run
-    vectorized in numpy inside the task; nothing doc-grain is ever
-    collected or joined. Driver state stays O(model x tasks).
-    Reference anchor: GPT-3 App. A / CCNet linear quality filters."""
-    import numpy as np
-    import pyarrow as pa
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda x: x != F.lit(""),
-    )
-    n_b = N_BUCKETS  # hex buckets; index N_BUCKETS = the bias slot
-
-    def _build(batches):
-        import hashlib
-
-        for b in batches:
-            ys_out, bs_out, xs_out = [], [], []
-            ys = b.column("y").to_pylist()
-            ws = b.column("ws").to_pylist()
-            for y, wlist in zip(ys, ws):
-                tw = len(wlist)
-                if tw == 0:
-                    continue  # zero-token docs excluded (oracle form)
-                counts: dict[int, int] = {}
-                for w in wlist:
-                    i = int(
-                        hashlib.md5(w.encode("utf-8")).hexdigest()[:2],
-                        16,
-                    )
-                    counts[i] = counts.get(i, 0) + 1
-                idx = sorted(counts)
-                ys_out.append(float(y))
-                bs_out.append(idx + [n_b])
-                xs_out.append(
-                    [counts[i] * 1.0 / tw for i in idx] + [1.0]
-                )
-            if not ys_out:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ys_out, type=pa.float64()),
-                    pa.array(bs_out, type=pa.list_(pa.int32())),
-                    pa.array(xs_out, type=pa.list_(pa.float64())),
-                ],
-                names=["y", "bs", "xs"],
-            )
-
-    # ONE corpus pass: tokenize + md5-bucket + L1-normalize per doc,
-    # pinned eagerly — every round below reads this narrow table.
-    train = (
-        docs.select(
-            F.when(F.col("source") == TRUSTED_SOURCE, 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-            words.alias("ws"),
-        )
-        .mapInArrow(
-            _build, "y double, bs array<int>, xs array<double>"
-        )
-        .localCheckpoint(eager=True)
-    )
-    cw = train.agg(
-        F.sum("y").alias("pos"),
-        F.count("*").alias("tot"),
-        F.round((F.count("*") - F.sum("y")) / F.sum("y"), 6).alias("pw"),
-    ).first()
-    pos, tot, pw = float(cw["pos"]), int(cw["tot"]), float(cw["pw"])
-    denom = pos * pw + (tot - pos)
-
-    partial_schema = (
-        "g array<double>, seen array<int>, lsum double"
-    )
-
-    def _pass(w_vec):
-        """One fit pass: per-task partial gradient sums by bucket,
-        bucket presence, and (for w_vec != None) the loss sum under
-        the current rounded weights."""
-        wv = None if w_vec is None else np.asarray(w_vec)
-
-        def fn(batches):
-            g = np.zeros(n_b + 1)
-            seen = np.zeros(n_b + 1, dtype=np.int32)
-            lsum = 0.0
-            for b in batches:
-                ys, fb, fx, starts, lens = _lrp_doc_arrays(b)
-                if len(ys) == 0:
-                    continue
-                wt = np.where(ys == 1.0, pw, 1.0)
-                np.add.at(seen, fb, 1)
-                if wv is None:
-                    # round 1: all weights 0 -> sigmoid = 0.5
-                    r = wt * (0.5 - ys)
-                else:
-                    m = np.add.reduceat(fx * wv[fb], starts)
-                    m = np.array([_round6(v) for v in m])
-                    p = np.array(
-                        [_round6(v) for v in 1.0 / (1.0 + np.exp(-m))]
-                    )
-                    lsum += float(
-                        np.sum(
-                            wt
-                            * -(
-                                ys * np.log(p)
-                                + (1.0 - ys) * np.log(1.0 - p)
-                            )
-                        )
-                    )
-                    r = wt * (p - ys)
-                g += np.bincount(
-                    fb, weights=np.repeat(r, lens) * fx,
-                    minlength=n_b + 1,
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([g.tolist()], type=pa.list_(pa.float64())),
-                    pa.array(
-                        [seen.tolist()], type=pa.list_(pa.int32())
-                    ),
-                    pa.array([lsum], type=pa.float64()),
-                ],
-                names=["g", "seen", "lsum"],
-            )
-
-        rows = train.mapInArrow(fn, partial_schema).collect()
-        g = np.zeros(n_b + 1)
-        seen = np.zeros(n_b + 1, dtype=np.int64)
-        lsum = 0.0
-        for r in rows:
-            g += np.asarray(r["g"])
-            seen += np.asarray(r["seen"], dtype=np.int64)
-            lsum += float(r["lsum"])
-        return g, seen, lsum
-
-    bstr = [f"{i:02x}" for i in range(n_b)] + [LRP_BIAS]
-    # round 1 (weights all zero): g1 = round(sum(wt (0.5-y) x)/denom)
-    gsum1, seen, _ = _pass(None)
-    if not seen[n_b]:
-        raise ValueError(
-            f"logreg round-2 model is missing the bias bucket "
-            f"'{LRP_BIAS}' (0 docs survived the token filter) — "
-            "the feature table is empty or the corpus was filtered "
-            "to zero labeled docs, so no model can be fit"
-        )
-    present = [i for i in range(n_b + 1) if seen[i]]
-    g1 = {i: _round6(gsum1[i] / denom) for i in present}
-    w1 = {
-        i: _round6(
-            -LEARNING_RATE * g1[i] / (math.sqrt(g1[i] * g1[i]) + LRP_EPS)
-        )
-        for i in present
-    }
-    w1_vec = np.zeros(n_b + 1)
-    for i in present:
-        w1_vec[i] = w1[i]
-    # round 2: margins/sigmoids under w1, loss_r2, g2, w2
-    gsum2, _, lsum2 = _pass(w1_vec)
-    loss_r2 = _round6(lsum2 / denom)
-    g2 = {
-        i: _round6(
-            gsum2[i] / denom
-            + (0.0 if i == n_b else L2_LAMBDA * w1[i])
-        )
-        for i in present
-    }
-    w2 = {
-        i: _round6(
-            w1[i]
-            - LEARNING_RATE
-            * g2[i]
-            / (math.sqrt(g1[i] * g1[i] + g2[i] * g2[i]) + LRP_EPS)
-        )
-        for i in present
-    }
-    w2_vec = np.zeros(n_b + 1)
-    for i in present:
-        w2_vec[i] = w2[i]
-    # final loss under w2 (gradient partials unused)
-    _, _, lsum3 = _pass(w2_vec)
-    loss_final = _round6(lsum3 / denom)
-    top = sorted(present, key=lambda i: (-abs(w2[i]), bstr[i]))[:20]
+    """The fit laid open: ``logreg_fit``'s first 2 rounds on the
+    trusted-source labels, reported as the 20 buckets with the largest
+    |w2| — each bucket's (md5 2-hex-char name; ``~bias`` for the bias)
+    round-1 and round-2 gradient and weight, beside the training loss
+    under w1 (``loss_r2``) and under w2 (``loss_final``). Only buckets
+    some document holds are listed. Reference anchor: GPT-3 App. A /
+    CCNet linear quality filters."""
+    train = _trusted_features(spark, sf_dir).persist()
+    try:
+        # one round more than reported: round 3's pass measures the
+        # loss under w2
+        fit = logreg_fit(train, LRP_ROUNDS + 1)
+    finally:
+        train.unpersist()
+    g1, g2, _ = fit.grads
+    _, w1, w2, _ = fit.weights
+    name = [f"{i:02x}" for i in range(N_BUCKETS)] + [LRP_BIAS]
+    top = sorted(
+        np.flatnonzero(fit.seen), key=lambda i: (-abs(w2[i]), name[i])
+    )[:20]
     return literal_frame(
         spark,
         "bucket string, g1 double, w1 double, g2 double, w2 double,"
         " loss_r2 double, loss_final double",
         [
-            (bstr[i], g1[i], w1[i], g2[i], w2[i], loss_r2, loss_final)
+            (
+                name[i],
+                float(g1[i]),
+                float(w1[i]),
+                float(g2[i]),
+                float(w2[i]),
+                fit.losses[1],
+                fit.losses[2],
+            )
             for i in top
         ],
     ).orderBy(F.abs(F.col("w2")).desc(), "bucket")
@@ -915,10 +659,7 @@ def score_calibration_ece(
     10-cell aggregate, and the ECE total rides a 1-row
     broadcast back onto the cells. No window, no pair stage."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda x: x != F.lit(""),
-    )
+    w = _words()
     conf = F.round(
         F.size(F.array_distinct(w)).cast("double")
         / F.greatest(F.size(w), F.lit(1)),

@@ -60,7 +60,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.rounding import spark_round
+from ..functions.rounding import round6
 from ..plans.registry import query
 from ..sources.tables import literal_frame, load_table
 
@@ -76,20 +76,6 @@ KMP_ITERS = 2  # their assignment rounds (KMP_ITERS - 1 updates)
 SEMDEDUP_TAU = 0.35
 
 
-def _round6(x: np.ndarray) -> np.ndarray:
-    """``spark_round(x, 6)`` elementwise. For an integral q, q / 1e6
-    is the double nearest q x 10^-6, as the decimal path gives; only
-    the choice of q can differ, and only where x * 1e6 sits within
-    float noise of a .5 boundary -- those few go through spark_round."""
-    t = np.abs(x) * 1e6
-    out = np.copysign(np.floor(t + 0.5) / 1e6, x)
-    near = np.abs(t - np.floor(t) - 0.5) <= np.maximum(t, 1.0) * 2.0**-40
-    near |= t >= 2.0**52
-    for i in np.flatnonzero(near):
-        out.flat[i] = spark_round(x.flat[i])
-    return out
-
-
 def _matrix(col) -> np.ndarray:
     """A non-empty Arrow list<float|double> column as an [n, d]
     float64 matrix."""
@@ -103,7 +89,7 @@ def _nearest(M: np.ndarray, C: np.ndarray):
     cluster and never wins."""
     live = ~np.isnan(C[:, 0])
     Cl = np.where(live[:, None], C, 0.0)
-    d2 = _round6(
+    d2 = round6(
         (M * M).sum(axis=1)[:, None]
         - 2.0 * (M @ Cl.T)
         + (Cl * Cl).sum(axis=1)[None, :]
@@ -192,7 +178,7 @@ def _kmeans_fit_impl(spark: SparkSession, sf_dir: str, k: int, iters: int):
         cnt = sum(np.asarray(r["c"], dtype=np.int64) for r in parts)
         centroids = np.where(
             (cnt > 0)[:, None],
-            _round6(S.reshape(shape) / np.maximum(cnt, 1)[:, None]),
+            round6(S.reshape(shape) / np.maximum(cnt, 1)[:, None]),
             np.nan,
         )
     return emb, centroids
@@ -696,7 +682,7 @@ def pca_power_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Equality discipline: each round's direction is still rounded at
     6 dp per component (via the bit-faithful driver twin of
-    F.round, `_spark_round6`), so engines re-synchronize after
+    F.round, `round6`), so engines re-synchronize after
     every round exactly as before; the final output columns are
     rounded IN SPARK on literal scalars. Sub-rounding float noise vs
     the oracle's summation order is ~1e-12 relative — the same
@@ -714,7 +700,7 @@ def pca_power_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         ysum = float(s @ v) - n * mdotv
         z = (g @ v - mdotv * s) / n - m * (ysum / n)
         zn_val = float(np.sqrt(z @ z))
-        v = np.array([spark_round(zd / zn_val) for zd in z])
+        v = round6(z / zn_val)
     top5 = sorted(
         ((i + 1, float(v[i])) for i in range(d)),
         key=lambda kv: (-abs(kv[1]), kv[0]),

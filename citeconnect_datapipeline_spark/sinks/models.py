@@ -53,8 +53,16 @@ def save_classifier_weights(
 
 def load_classifier_weights(spark: SparkSession, path: str) -> list[float]:
     """Load a weight vector — directly consumable by
-    ``score_with_weights``."""
+    ``score_with_weights``. Raises ValueError unless the slots are
+    0..N_BUCKETS (the bias last)."""
+    from ..operators.classifier import N_BUCKETS
+
     rows = spark.read.parquet(path).orderBy("slot").collect()
+    if len(rows) != N_BUCKETS + 1:
+        raise ValueError(
+            f"corrupt weight artifact at {path}: {len(rows)} slots,"
+            f" expected {N_BUCKETS + 1}"
+        )
     if [r["slot"] for r in rows] != list(range(len(rows))):
         raise ValueError(
             f"corrupt weight artifact at {path}: slots not contiguous"

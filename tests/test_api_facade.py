@@ -47,17 +47,11 @@ def test_classifier_on_inmemory_features(spark):
     from pyspark.sql import functions as F
 
     docs = _docs(spark)
-    from citeconnect_datapipeline_spark.operators.classifier import (
-        _bucket_features,
-    )
-
-    feats = _bucket_features(docs)
-    labels = docs.select(
-        "doc_id", F.when(F.col("doc_id") <= 2, 1.0).otherwise(0.0).alias("y")
-    )
-    w, losses = api.classifier.logreg_fit(feats, labels, iters=3)
-    assert len(w) == 257 and len(losses) == 3
-    scored = api.classifier.score_with_weights(feats, w)
+    train = api.classifier.doc_features(docs, F.col("doc_id") <= 2)
+    fit = api.classifier.logreg_fit(train, rounds=3)
+    w = fit.weights[-1]
+    assert len(w) == 257 and len(fit.losses) == 3
+    scored = api.classifier.score_with_weights(train, w)
     assert scored.count() == 4
 
 

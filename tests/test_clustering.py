@@ -49,8 +49,10 @@ def test_kmeans_sizes_and_inertia_match_numpy(spark, sf_dir, vecs):
         assert abs(float(d2[sel].sum()) - r["inertia"]) < 1e-2
 
 def test_round6_is_spark_round_bit_for_bit():
-    from citeconnect_datapipeline_spark.functions.rounding import spark_round
-    from citeconnect_datapipeline_spark.operators.clustering import _round6
+    from citeconnect_datapipeline_spark.functions.rounding import (
+        round6,
+        spark_round,
+    )
 
     rng = np.random.default_rng(3)
     x = np.concatenate(
@@ -62,7 +64,7 @@ def test_round6_is_spark_round_bit_for_bit():
         ]
     )
     want = np.array([spark_round(v) for v in x])
-    assert np.array_equal(_round6(x).view(np.int64), want.view(np.int64))
+    assert np.array_equal(round6(x).view(np.int64), want.view(np.int64))
 
 
 def test_kmeans_fit_matches_numpy_lloyd_with_6dp_rounding(

@@ -234,8 +234,11 @@ BUILD_EXECUTES = {
     # (k*d partial sums collected per Lloyd round)
     "kmeans_portable",  # k-means fit collects k*d partial sums per
     # Lloyd round
-    "logreg_adagrad_portable",  # pins the 257-row weight table per
-    # AdaGrad round (O(model) collect, the logreg_fit contract)
+    # (logreg_fit, the one logistic-regression fit, also runs at
+    # construction, but the plans it leaves behind -- a scored pinned
+    # table, its confusion aggregate, a literal weight table -- pass
+    # these checks, so quality_classifier, classifier_eval and
+    # logreg_adagrad_portable carry no entry)
     "neardup_cluster_histogram",  # shares the CC loop
     "neardup_components",
     "neardup_keep_best",  # shares the CC loop
@@ -246,8 +249,6 @@ BUILD_EXECUTES = {
     "part_copurchase_pagerank",
     "pca_power_portable",  # power iteration collects the 64-row
     # direction vector per round (O(d) model, k-means contract)
-    "quality_classifier",  # LR fit collects 257 gradient rows/round
-    "classifier_eval",  # consumes the same memoized fit
     "semantic_dedup",  # same k-means fit feeds the cluster blocking
 }
 

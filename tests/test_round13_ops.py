@@ -7,19 +7,24 @@ already covered by an oracle hash or an existing parity test:
 
 - the md5-SimHash Arrow kernel vs the r12 SQL chain, end-to-end on
   the real lake plus adversarial edge corpora;
-- functions.rounding.spark_round vs F.round on doubles (the driver-
-  side rounding the pca/logreg/bootstrap sufficient-statistics fits
-  now rely on for their per-round engine re-synchronization).
+- functions.rounding.spark_round and its vectorised form round6 vs
+  F.round on doubles (the driver- and kernel-side rounding the
+  pca/logreg/k-means/bootstrap fits rely on for their per-round
+  engine re-synchronization).
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from citeconnect_datapipeline_spark.functions.rounding import spark_round
+from citeconnect_datapipeline_spark.functions.rounding import (
+    round6,
+    spark_round,
+)
 from citeconnect_datapipeline_spark.operators.dedup import (
     SIMHASH_PORTABLE_BITS,
     _portable_simhash,
@@ -244,12 +249,16 @@ def test_spark_round_parity_random(spark):
     vals = [rng.uniform(-1, 1) for _ in range(400)]
     vals += [rng.uniform(-1e6, 1e6) for _ in range(200)]
     vals += [rng.uniform(-1e-6, 1e-6) for _ in range(200)]
+    # the nearest doubles to 7-decimal .5 ties: the vectorised form's
+    # near-boundary fallback must pick what F.round picks
+    vals += [(2 * rng.randint(-10**6, 10**6) + 1) * 5e-7 for _ in range(200)]
     df = spark.createDataFrame(
         [(v,) for v in vals], "v double"
     ).select(F.round(F.col("v"), 6).alias("r"))
     want = [r["r"] for r in df.collect()]
     got = [spark_round(v) for v in vals]
     assert got == want
+    assert round6(np.array(vals)).tolist() == want
 
 
 # ---------------------------------------------------------------- #

@@ -1165,6 +1165,7 @@ def test_model_artifacts_roundtrip(spark, tmp_path):
     must be directly consumable by the apply-side functions."""
     from citeconnect_datapipeline_spark.operators.classifier import (
         N_BUCKETS,
+        doc_features,
         score_with_weights,
     )
     from citeconnect_datapipeline_spark.operators.tokenizer import (
@@ -1193,12 +1194,18 @@ def test_model_artifacts_roundtrip(spark, tmp_path):
     save_classifier_weights(spark, weights, str(tmp_path / "w"))
     lw = load_classifier_weights(spark, str(tmp_path / "w"))
     assert lw == weights
-    from citeconnect_datapipeline_spark.operators.classifier import (
-        _bucket_features,
-    )
-
-    scored = score_with_weights(_bucket_features(docs), lw)
+    train = doc_features(docs, F.col("doc_id") == 1)
+    scored = score_with_weights(train, lw)
     assert scored.count() == 2
+    # a vector of any other length is refused by name, on load and on
+    # scoring, instead of scoring with slots ignored or IndexError
+    for n in (10, 300):
+        bad = [0.0] * n
+        with pytest.raises(ValueError, match=f"{n} slots"):
+            save_classifier_weights(spark, bad, str(tmp_path / f"w{n}"))
+            load_classifier_weights(spark, str(tmp_path / f"w{n}"))
+        with pytest.raises(ValueError, match=f"got {n}"):
+            score_with_weights(train, bad)
 
 
 def test_jsonl_ingest_quarantines_malformed_lines(spark, tmp_path):

@@ -36,9 +36,10 @@ PICKS = {
     "joins + keyed aggregates, no windows, fixed relation fan-out",
     "theta_overlap_portable": "r6: KMV sketch set algebra — per-type "
     "top-K window, then K-row-bounded joins only",
-    "logreg_adagrad_portable": "r6b: pinned AdaGrad rounds — the "
-    "returned plan reads LocalRelation weights; corpus scans only "
-    "feed the two loss scalars",
+    "logreg_adagrad_portable": "the one logistic-regression fit runs "
+    "while the query is built (one mapInArrow pass per AdaGrad round); "
+    "the returned plan only sorts the 20-row LocalTableScan of its "
+    "weights",
     "event_pattern_detect": "r6b: one user-keyed exchange feeds "
     "session numbering AND the capped path fold; patterns are "
     "codegen rlike/regexp_count",
@@ -104,6 +105,7 @@ KEEP = re.compile(
     r"Scan parquet|BatchScan|BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin"
     r"|BroadcastNestedLoop|Exchange|TakeOrderedAndProject|HashAggregate"
     r"|Window|Generate|PushedFilters|WholeStageCodegen|SortAggregate"
+    r"|LocalTableScan"
 )
 
 
